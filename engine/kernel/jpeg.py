@@ -513,6 +513,9 @@ def decode_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
             continue
         if marker == 0xD9:  # EOI
             break
+        if marker == 0x01 or 0xD0 <= marker <= 0xD7:
+            # TEM / RSTn carry no length; before SOS they mean a corrupt stream
+            raise ValueError(f"unexpected standalone marker 0xff{marker:02x}")
         if marker in (0xC2,):
             raise ValueError("progressive JPEG (SOF2) not supported")
         if marker in (0xC1, 0xC3) or 0xC5 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
@@ -557,6 +560,8 @@ def decode_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
                 )
                 p += 17 + n
         elif marker == 0xC0:  # SOF0
+            if len(body) < 6:
+                raise ValueError("truncated SOF0 body")
             precision = body[0]
             if precision != 8:
                 raise ValueError(f"unsupported sample precision {precision}")
@@ -564,18 +569,26 @@ def decode_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
             nf = body[5]
             if nf not in (1, 3):
                 raise ValueError(f"unsupported component count {nf}")
+            if len(body) < 6 + 3 * nf:
+                raise ValueError("truncated SOF0 body")
             comps = []
             for i in range(nf):
                 cid = body[6 + 3 * i]
                 hv = body[7 + 3 * i]
+                if not (1 <= hv >> 4 <= 4 and 1 <= hv & 0x0F <= 4):
+                    raise ValueError(f"invalid sampling factors 0x{hv:02x}")
                 comps.append((cid, hv >> 4, hv & 0x0F, body[8 + 3 * i]))
             frame = (w_, h_, comps)
         elif marker == 0xDD:  # DRI
+            if len(body) < 2:
+                raise ValueError("truncated DRI body")
             (restart_interval,) = struct.unpack(">H", body[:2])
         elif marker == 0xDA:  # SOS
             if frame is None:
                 raise ValueError("SOS before SOF0")
-            ns = body[0]
+            ns = body[0] if body else 0
+            if len(body) < 1 + 2 * ns:
+                raise ValueError("truncated SOS body")
             scan = []
             for i in range(ns):
                 cs = body[1 + 2 * i]

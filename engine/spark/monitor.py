@@ -2,7 +2,7 @@
 
 Closes the loop the reference's per-request ExtractionMetrics
 (extraction.py:53-103) can't: at table scale the interesting signal is
-the *distribution* over time and partitions, not one request. Both
+the *distribution* over time and partitions, not one request. All
 functions are pure native expressions (zero Python, map-side partial
 aggregation).
 """
@@ -53,12 +53,35 @@ def quality_drift(results: "DataFrame", window: str = "1 day") -> "DataFrame":
     )
 
 
+def partition_metrics(spark: "SparkSession", out_dir: str) -> "DataFrame":
+    """The job's per-partition metrics table with one row per
+    (run_id, part_id). A slice re-committed after a crash between its
+    metrics and checkpoint writes has its rows twice; the copies agree
+    on the counts (extraction is deterministic), so either one will do."""
+    return spark.read.parquet(f"{out_dir}/metrics").dropDuplicates(["run_id", "part_id"])
+
+
+def run_totals(spark: "SparkSession", out_dir: str, run_id: str) -> dict[str, int]:
+    """Turns, bytes parsed and empty extractions of one run."""
+    row = (
+        partition_metrics(spark, out_dir)
+        .filter(F.col("run_id") == run_id)
+        .agg(F.sum("n_turns"), F.sum("bytes_parsed"), F.sum("n_empty"))
+        .collect()[0]
+    )
+    return {
+        "turns_processed": int(row[0] or 0),
+        "bytes_parsed": int(row[1] or 0),
+        "empty_extractions": int(row[2] or 0),
+    }
+
+
 def metrics_summary(spark: "SparkSession", out_dir: str) -> "DataFrame":
     """Per-run roll-up of the job's per-partition metrics table:
     totals, throughput percentiles across partitions, and the
     partition-skew ratio (max/median turns per partition) — the number
     that says whether the salted layout is actually balancing."""
-    m = spark.read.parquet(f"{out_dir}/metrics")
+    m = partition_metrics(spark, out_dir)
     return m.groupBy("run_id").agg(
         F.count("*").alias("n_partitions"),
         F.sum("n_turns").alias("total_turns"),

@@ -38,6 +38,7 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import SparkSession
 
     from engine.spark.job import run_checkpointed
+    from engine.spark.monitor import run_totals
     from engine.spark.transcripts import (
         synthesize_transcripts,
         transcripts_from_jsonl,
@@ -71,14 +72,10 @@ def main(argv: list[str] | None = None) -> int:
         or spark.sparkContext.defaultParallelism * 4,
     )
     n = results.count()
-    metrics = spark.read.parquet(f"{args.output}/metrics")
-    agg = metrics.groupBy().sum("n_turns", "bytes_parsed", "n_empty").collect()[0]
     print(json.dumps({
         "run_id": args.run_id,
         "rows_in_sink": n,
-        "turns_processed": int(agg[0] or 0),
-        "bytes_parsed": int(agg[1] or 0),
-        "empty_extractions": int(agg[2] or 0),
+        **run_totals(spark, args.output, args.run_id),
         "source_errors": n_source_errors,
     }))
     spark.stop()

@@ -422,3 +422,150 @@ def test_blocked_stable_order_keeps_null_turn_idx(spark):
     }
     assert got == want
     assert got[("c1", None)] == 1  # nulls first, like the window
+
+
+METRICS_DDL = (
+    "run_id string, part_id int, n_turns bigint, bytes_parsed bigint, "
+    "n_empty bigint, empty_rate double, turns_per_sec double, wall_s double"
+)
+CHECKPOINT_DDL = "run_id string, part_id int, status string, n_turns bigint"
+
+
+def _ddl(df) -> str:
+    return ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
+
+
+def _by_key(df) -> dict:
+    return {
+        (r.conv_id, r.turn_idx): r.cleaned_text
+        for r in df.select("conv_id", "turn_idx", "cleaned_text").collect()
+    }
+
+
+def test_resume_extracts_only_unfinished_partitions(spark, transcripts, tmp_path_factory, monkeypatch):
+    """The resume leg sends only the rows of partitions still to do
+    through the extraction; re-running a completed run extracts nothing."""
+    from engine.spark import job
+    from engine.spark.pipeline import split_valid
+
+    inputs = []
+    real = job.run_extraction
+
+    def spy(df, **kw):
+        inputs.append(df)
+        return real(df, **kw)
+
+    monkeypatch.setattr(job, "run_extraction", spy)
+    out = str(tmp_path_factory.mktemp("resume_todo"))
+    with pytest.raises(RuntimeError, match="injected failure"):
+        job.run_checkpointed(spark, transcripts, out, num_partitions=8, fail_after_batches=1)
+    done = job._completed_parts(f"{out}/checkpoints", "run-1")
+    todo = [p for p in range(8) if p not in done]
+    assert done and todo
+
+    inputs.clear()
+    res = job.run_checkpointed(spark, transcripts, out, num_partitions=8)
+    assert len(inputs) == 1
+    valid = split_valid(transcripts)[0]
+    want = valid.filter(part_expr(8).isin(todo)).count()
+    assert inputs[0].count() == want < valid.count()
+    assert res.count() == transcripts.count()
+
+    inputs.clear()
+    job.run_checkpointed(spark, transcripts, out, num_partitions=8)
+    assert inputs == []
+
+
+def test_commit_records_schema_temp_files_and_spark_written_mix(
+    spark, transcripts, results, tmp_path_factory
+):
+    """Checkpoint/metrics files the job writes with pyarrow read back in
+    Spark with the column types Spark itself wrote for them; hidden temp
+    files are ignored by the resume and by Spark; and a checkpoint dir
+    that mixes Spark-written records (older versions of the job) with
+    pyarrow-written ones resumes to the one-shot result."""
+    import glob
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from engine.spark.job import CHECKPOINT_SCHEMA, _completed_parts, run_checkpointed
+
+    out = str(tmp_path_factory.mktemp("records"))
+    ckpt, metrics = f"{out}/checkpoints", f"{out}/metrics"
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_checkpointed(spark, transcripts, out, num_partitions=8, fail_after_batches=2)
+    assert _ddl(spark.read.parquet(ckpt)) == CHECKPOINT_DDL
+    assert _ddl(spark.read.parquet(metrics)) == METRICS_DDL
+    done = _completed_parts(ckpt, "run-1")
+    assert len(done) == 4
+
+    # re-write the first slice's records the way older versions did
+    for table, ddl in ((ckpt, CHECKPOINT_DDL), (metrics, METRICS_DDL)):
+        first = sorted(glob.glob(f"{table}/part-*.parquet"))[0]
+        rows = [tuple(r.values()) for r in pq.read_table(first).to_pylist()]
+        os.remove(first)
+        spark.createDataFrame(rows, ddl).write.mode("append").parquet(table)
+        assert _ddl(spark.read.parquet(table)) == ddl
+    assert _completed_parts(ckpt, "run-1") == done
+
+    # a temp file left by a crash mid-write, claiming every partition
+    stray = pa.Table.from_pylist(
+        [{"run_id": "run-1", "part_id": p, "status": "done", "n_turns": 0} for p in range(8)],
+        schema=CHECKPOINT_SCHEMA,
+    )
+    pq.write_table(stray, f"{ckpt}/.part-stray.parquet.tmp")
+    assert _completed_parts(ckpt, "run-1") == done
+    assert spark.read.parquet(ckpt).count() == len(done)
+
+    res = run_checkpointed(spark, transcripts, out, num_partitions=8)
+    assert _by_key(res) == _by_key(results)
+    assert _completed_parts(ckpt, "run-1") == set(range(8))
+    ck = spark.read.parquet(ckpt)
+    assert ck.count() == 8 and ck.select("part_id").distinct().count() == 8
+
+
+def test_metrics_count_each_partition_once(spark, transcripts, results, tmp_path_factory):
+    """A slice whose metrics were committed twice (crash between its
+    metrics and checkpoint writes, then a resume) and a second run in the
+    same output dir must not inflate one run's totals."""
+    import glob
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from engine.spark.job import METRICS_SCHEMA, run_checkpointed
+    from engine.spark.monitor import metrics_summary, run_totals
+
+    out = str(tmp_path_factory.mktemp("metrics_dup"))
+    run_checkpointed(spark, transcripts, out, run_id="dup-1", num_partitions=8)
+    metrics = f"{out}/metrics"
+    replayed = next(
+        p for p in sorted(glob.glob(f"{metrics}/part-*.parquet"))
+        if pq.read_metadata(p).num_rows > 0
+    )
+    shutil.copy(replayed, f"{metrics}/part-replayed.parquet")
+    other = {
+        "run_id": "dup-2", "part_id": 0, "n_turns": 1000, "bytes_parsed": 10**6,
+        "n_empty": 0, "empty_rate": 0.0, "turns_per_sec": 1.0, "wall_s": 1.0,
+    }
+    pq.write_table(pa.Table.from_pylist([other], schema=METRICS_SCHEMA), f"{metrics}/part-other.parquet")
+
+    raw = spark.read.parquet(metrics).filter(F.col("run_id") == "dup-1").count()
+    parts = results.select("part_id").distinct().count()
+    assert raw > parts
+    summary = {r.run_id: r for r in metrics_summary(spark, out).collect()}
+    assert summary["dup-1"].n_partitions == parts
+    assert summary["dup-1"].total_turns == transcripts.count()
+    assert summary["dup-2"].total_turns == 1000
+
+    truth = results.agg(
+        F.count("*"), F.sum("bytes_in"), F.sum(F.col("is_empty").cast("long"))
+    ).collect()[0]
+    assert run_totals(spark, out, "dup-1") == {
+        "turns_processed": truth[0],
+        "bytes_parsed": truth[1],
+        "empty_extractions": truth[2],
+    }
