@@ -477,12 +477,11 @@ def _rp_plan(spark: SparkSession, sf_dir: str) -> tuple[str, int, int]:
 def _dedup_text_semantic_adaptive(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """dedup_text_semantic at its production operating point (r4
-    verdict task #4): persisted hash-embed vectors + random-hyperplane
-    LSH with rp_lsh_params-derived width/probes, instead of the
-    oracle-pinned coordinate-sign sign_dims=6 whose skewed buckets
-    cost ~60 s at sf0.1 on this same-generator corpus. This is the
-    form a pipeline actually runs — and benches."""
+    """Semantic text near-dups at their production operating point:
+    persisted hash-embed vectors + random-hyperplane LSH with
+    rp_lsh_params-derived width/probes (why hyperplanes, not coordinate
+    signs: rp_lsh_params). This is the form a pipeline actually runs —
+    and benches."""
     from engine.spark import analytics as A
 
     path, sign_dims, probes = _rp_plan(spark, sf_dir)
@@ -1203,12 +1202,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # norm operands, flattened nonzero (doc_id, pos, value)
         "hash_embed": A.hash_embed,
         # text in -> semantic near-dup pairs out, no external model:
-        # hash embeddings fed into the multi-probe sign-bucket cosine
-        # machinery (order-insensitive complement to MinHash)
-        "dedup_text_semantic": A.dedup_text_semantic,
-        # the same composition at its production operating point:
-        # persisted vector artifact + adaptive sign width (the pinned
-        # sign_dims=6 entry above exists for its fully-static oracle)
+        # persisted hash-embed vector artifact + random-hyperplane LSH
+        # (order-insensitive complement to MinHash)
         "dedup_text_semantic_adaptive": _dedup_text_semantic_adaptive,
         # keep-list tail of the semantic family (the apply symmetry
         # every other dedup modality has): pairs -> min-label
@@ -1266,7 +1261,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # codes (no FP in the hot loop), cosine reconstructed per
         # surviving candidate from the two scales
         "simsearch_int8": A.simsearch_int8,
-        "simsearch_ivf": lambda s, d: A.simsearch_ivf(s, d, sign_dims=6),
         # served-codebook form: train once (deterministic), persist the
         # codebook parquet, serve from the loaded codebook — identical
         # to in-line training (test-asserted), and the persisted table
@@ -1420,10 +1414,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # (WITHIN each group and between the first three the order is
     # whatever full.items() yields — only the group membership
     # matters, all front entries land well inside the 50-slot window):
-    #   1. the 4 round-4 ops that have NEVER had a driver row (they sat
+    #   1. the 3 round-4 ops that have NEVER had a driver row (they sat
     #      at positions 50-53 last round, just outside the 50-entry
-    #      sample window): source_keywords, dedup_report, hash_embed,
-    #      dedup_text_semantic;
+    #      sample window): source_keywords, dedup_report, hash_embed;
     #   2. the 2 round-4 red driver rows (transcript_prepare /
     #      transcript_curate — oracle-twin HUGEINT cast fixed this
     #      round) so CORRECTNESS_r05 re-records them;
@@ -1435,12 +1428,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     #      refusal_detect, truncation_detect, assistant_echo,
     #      turn_integrity);
     # then the r3-sampled entries (oldest driver evidence, refresh) and
-    # the r4-green entries last (freshest evidence). With 23 front
-    # slots, 27 of the 49 r3 entries also land in the 50-slot window.
-    never_sampled = {
-        "source_keywords", "dedup_report", "hash_embed",
-        "dedup_text_semantic",
-    }
+    # the r4-green entries last (freshest evidence). With 22 front
+    # slots, 28 of the 49 r3 entries also land in the 50-slot window.
+    never_sampled = {"source_keywords", "dedup_report", "hash_embed"}
     red_r4 = {"transcript_curate", "transcript_prepare"}
     new_r5 = {
         "dedup_text_semantic_adaptive",
@@ -2359,42 +2349,35 @@ _CAREER_PROGRESSION_SQL = """
 """
 
 
-# sign-bucketed embedding near-dup pair CTEs (unit-normalized, 6-bit
-# buckets × 2 probes — pinned to match the queries() lambda); shared by
-# the pair-listing and keep-list oracles
-_EMB_PAIR_CTES = """e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS u FROM embeddings),
+def _emb_pair_ctes(sign_dims: int = 6, probes: int = 2) -> str:
+    """DuckDB twin of analytics.dedup_embedding_cosine's pair stage:
+    unit-normalized vectors (zero-norm excluded), one sign-bucket key
+    per probe (probe index in the high bits), the guarded bucket join
+    (_bucket_pair_ctes) and round-5 cosines in ``sims``. Pinned to the
+    queries() lambdas' sign_dims=6; shared by the pair-listing and
+    keep-list oracles."""
+    from engine.spark.analytics import LSH_MAX_BUCKET_DOCS
+
+    keys = ", ".join(
+        f"{p << sign_dims} + "
+        + " + ".join(
+            f"(CASE WHEN v[{p * sign_dims + i + 1}] > 0 THEN {2**i} ELSE 0 END)"
+            for i in range(sign_dims)
+        )
+        for p in range(probes)
+    )
+    return f"""e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS u FROM embeddings),
                  e AS (SELECT vec_id,
                               list_transform(u, x -> x / sqrt(list_dot_product(u, u))) AS v
                        FROM e0 WHERE list_dot_product(u, u) > 0),
-                 b0 AS (SELECT vec_id, v,
-                              (CASE WHEN v[1] > 0 THEN 1 ELSE 0 END)
-                            + (CASE WHEN v[2] > 0 THEN 2 ELSE 0 END)
-                            + (CASE WHEN v[3] > 0 THEN 4 ELSE 0 END)
-                            + (CASE WHEN v[4] > 0 THEN 8 ELSE 0 END)
-                            + (CASE WHEN v[5] > 0 THEN 16 ELSE 0 END)
-                            + (CASE WHEN v[6] > 0 THEN 32 ELSE 0 END) AS bucket
+                 b AS (SELECT vec_id AS doc_id, v, unnest([{keys}]) AS bucket
                        FROM e),
-                 b1 AS (SELECT vec_id, v,
-                              (CASE WHEN v[7] > 0 THEN 1 ELSE 0 END)
-                            + (CASE WHEN v[8] > 0 THEN 2 ELSE 0 END)
-                            + (CASE WHEN v[9] > 0 THEN 4 ELSE 0 END)
-                            + (CASE WHEN v[10] > 0 THEN 8 ELSE 0 END)
-                            + (CASE WHEN v[11] > 0 THEN 16 ELSE 0 END)
-                            + (CASE WHEN v[12] > 0 THEN 32 ELSE 0 END) AS bucket
-                       FROM e),
-                 cand AS (
-                     SELECT a.vec_id AS vec_a, c.vec_id AS vec_b, a.v AS va, c.v AS vb
-                     FROM b0 a JOIN b0 c
-                       ON a.bucket = c.bucket AND a.vec_id < c.vec_id
-                     UNION
-                     SELECT a.vec_id, c.vec_id, a.v, c.v
-                     FROM b1 a JOIN b1 c
-                       ON a.bucket = c.bucket AND a.vec_id < c.vec_id),
+                 {_bucket_pair_ctes("b", "v", LSH_MAX_BUCKET_DOCS)},
                  sims AS (
                      -- unit vectors (normalized once in CTE e): cosine = dot
-                     SELECT vec_a, vec_b,
-                            round(list_dot_product(va, vb), 5) AS cosine
-                     FROM cand)"""
+                     SELECT DISTINCT doc_a AS vec_a, doc_b AS vec_b,
+                            round(list_dot_product(pa, pb), 5) AS cosine
+                     FROM bpairs)"""
 
 
 _NGRAM_JACCARD_SQL = r"""
@@ -2566,70 +2549,6 @@ def _hash_embed_oracle(dim: int = 64) -> str:
         SELECT hs.doc_id, hs.bucket AS pos, round(v / norm, 6) AS value
         FROM hs JOIN hn ON hs.doc_id = hn.doc_id
         WHERE norm > 0 AND round(v / norm, 6) != 0.0
-    """
-
-
-def _dedup_text_semantic_oracle(
-    dim: int = 64, threshold: float = 0.9, sign_dims: int = 6
-) -> str:
-    """DuckDB twin of analytics.dedup_text_semantic: dense round-6
-    hash-embed vectors (zero-norm docs excluded, exactly the Spark
-    filter), two 6-bit sign-bucket probes, bucket-local candidate
-    pairs, round-5 dot (the vectors are unit — _cosine contract)."""
-    def bucket_expr(offset: int) -> str:
-        return " + ".join(
-            f"(CASE WHEN v[{offset + i + 1}] > 0 THEN {2**i} ELSE 0 END)"
-            for i in range(sign_dims)
-        )
-
-    return f"""
-        WITH {_hash_embed_ctes(dim)},
-        hvals AS (
-            SELECT hs.doc_id, hs.bucket, round(v / norm, 6) AS val
-            FROM hs JOIN hn ON hs.doc_id = hn.doc_id WHERE norm > 0
-        ), hdense AS (
-            SELECT doc_id,
-                   map(list(bucket ORDER BY bucket),
-                       list(val ORDER BY bucket)) AS m
-            FROM hvals GROUP BY doc_id
-        ), he AS (
-            SELECT doc_id AS vec_id,
-                   list_transform(range(0, {dim}),
-                                  i -> CAST(coalesce(m[i][1], 0.0) AS DOUBLE))
-                       AS v
-            FROM hdense
-        ), hb0 AS (
-            SELECT vec_id, v, {bucket_expr(0)} AS bucket FROM he
-        ), hb1 AS (
-            SELECT vec_id, v, {bucket_expr(sign_dims)} AS bucket FROM he
-        ), hcand AS (
-            SELECT a.vec_id AS vec_a, c.vec_id AS vec_b,
-                   a.v AS va, c.v AS vb
-            FROM hb0 a JOIN hb0 c
-              ON a.bucket = c.bucket AND a.vec_id < c.vec_id
-            UNION
-            SELECT a.vec_id, c.vec_id, a.v, c.v
-            FROM hb1 a JOIN hb1 c
-              ON a.bucket = c.bucket AND a.vec_id < c.vec_id
-        )
-        , hsims AS (
-            -- dot as the SAME left fold Spark's F.aggregate runs
-            -- (0.0 + p1 + p2 + ...): list_dot_product may sum in a
-            -- different order (pairwise/FMA) and diverged by 1 ulp on
-            -- 22 of 1.1M pairs at sf0.1. Rounding is the explicit
-            -- floor(x*1e5 + 0.5)/1e5 IEEE formula — engine round()
-            -- builtins disagree within an ulp of a 5-dp boundary
-            -- (0.8040849999999999: Spark 0.80408, DuckDB 0.80409)
-            SELECT vec_a, vec_b,
-                   floor(list_reduce(
-                       list_prepend(0.0,
-                           list_transform(range(1, {dim + 1}),
-                                          i -> va[i] * vb[i])),
-                       (acc, x) -> acc + x) * 100000.0 + 0.5) / 100000.0
-                       AS cosine
-            FROM hcand
-        )
-        SELECT vec_a, vec_b, cosine FROM hsims WHERE cosine >= {threshold}
     """
 
 
@@ -3814,7 +3733,6 @@ def oracle_sql() -> dict[str, str]:
         "source_keywords": _source_keywords_oracle(),
         "dedup_report": _dedup_report_oracle(),
         "hash_embed": _hash_embed_oracle(),
-        "dedup_text_semantic": _dedup_text_semantic_oracle(),
         "dedup_text_semantic_adaptive":
             _dedup_text_semantic_adaptive_oracle(),
         "dedup_semantic_apply": _dedup_semantic_apply_oracle(),
@@ -4173,11 +4091,11 @@ def oracle_sql() -> dict[str, str]:
             GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
         """,
         "dedup_embedding_cosine": f"""
-            WITH {_EMB_PAIR_CTES}
+            WITH {_emb_pair_ctes()}
             SELECT vec_a, vec_b, cosine FROM sims WHERE cosine >= 0.35
         """,
         "dedup_apply_embeddings": f"""
-            WITH RECURSIVE {_EMB_PAIR_CTES},
+            WITH RECURSIVE {_emb_pair_ctes()},
             p AS (SELECT vec_a, vec_b FROM sims WHERE cosine >= 0.35),
             edges AS (
                 SELECT vec_a AS a, vec_b AS b FROM p
@@ -4210,50 +4128,6 @@ def oracle_sql() -> dict[str, str]:
                                   ORDER BY cosine DESC, vec_id) AS BIGINT) AS rnk
                        FROM sims)
             SELECT query_id, vec_id, cosine, rnk FROM r WHERE rnk <= 10
-        """,
-        "simsearch_ivf": """
-            WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS u FROM embeddings),
-                 e AS (SELECT vec_id,
-                              list_transform(u, x -> x / sqrt(list_dot_product(u, u))) AS v
-                       FROM e0 WHERE list_dot_product(u, u) > 0),
-                 b0 AS (SELECT vec_id, v,
-                              (CASE WHEN v[1] > 0 THEN 1 ELSE 0 END)
-                            + (CASE WHEN v[2] > 0 THEN 2 ELSE 0 END)
-                            + (CASE WHEN v[3] > 0 THEN 4 ELSE 0 END)
-                            + (CASE WHEN v[4] > 0 THEN 8 ELSE 0 END)
-                            + (CASE WHEN v[5] > 0 THEN 16 ELSE 0 END)
-                            + (CASE WHEN v[6] > 0 THEN 32 ELSE 0 END) AS bucket
-                       FROM e),
-                 b1 AS (SELECT vec_id, v,
-                              (CASE WHEN v[7] > 0 THEN 1 ELSE 0 END)
-                            + (CASE WHEN v[8] > 0 THEN 2 ELSE 0 END)
-                            + (CASE WHEN v[9] > 0 THEN 4 ELSE 0 END)
-                            + (CASE WHEN v[10] > 0 THEN 8 ELSE 0 END)
-                            + (CASE WHEN v[11] > 0 THEN 16 ELSE 0 END)
-                            + (CASE WHEN v[12] > 0 THEN 32 ELSE 0 END) AS bucket
-                       FROM e),
-                 q0 AS (SELECT vec_id AS query_id, v AS qv, bucket
-                        FROM b0 WHERE vec_id < 20),
-                 q1 AS (SELECT vec_id AS query_id, v AS qv, bucket
-                        FROM b1 WHERE vec_id < 20),
-                 cand AS (
-                     SELECT q0.query_id, b0.vec_id, q0.qv, b0.v
-                     FROM b0 JOIN q0 ON b0.bucket = q0.bucket
-                     WHERE b0.vec_id != q0.query_id
-                     UNION
-                     SELECT q1.query_id, b1.vec_id, q1.qv, b1.v
-                     FROM b1 JOIN q1 ON b1.bucket = q1.bucket
-                     WHERE b1.vec_id != q1.query_id),
-                 sims AS (
-                     SELECT query_id, vec_id,
-                            round(list_dot_product(qv, v), 5) AS cosine
-                     FROM cand),
-                 r AS (SELECT query_id, vec_id, cosine,
-                              CAST(row_number() OVER (
-                                  PARTITION BY query_id
-                                  ORDER BY cosine DESC, vec_id) AS BIGINT) AS rnk
-                       FROM sims)
-            SELECT query_id, vec_id, cosine, rnk FROM r WHERE rnk <= 3
         """,
         # recomputes the served-IVF search from the persisted codebook
         # parquet the query materializes at call time: squared-distance

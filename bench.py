@@ -314,7 +314,6 @@ BENCH_QUERY_NAMES = [
         "corpus_prepare",
         "career_progression",
         "simsearch_bruteforce",
-        "simsearch_ivf",
         "lang_id",
         "token_count",
         "ats_full_score",

@@ -29,6 +29,8 @@ from __future__ import annotations
 import math
 import struct
 
+from engine.kernel.png import check_frame_size
+
 # --- constant tables -------------------------------------------------
 
 # zigzag scan order, generated (not transcribed): diagonal s = r+c,
@@ -566,6 +568,7 @@ def decode_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
             if precision != 8:
                 raise ValueError(f"unsupported sample precision {precision}")
             h_, w_ = struct.unpack(">HH", body[1:5])
+            check_frame_size(w_, h_)
             nf = body[5]
             if nf not in (1, 3):
                 raise ValueError(f"unsupported component count {nf}")

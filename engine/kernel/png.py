@@ -27,6 +27,10 @@ import zlib
 _SIG = b"\x89PNG\r\n\x1a\n"
 _CHANNELS = {0: 1, 2: 3, 6: 4}
 _COLOR_TYPE = {1: 0, 3: 2, 4: 6}  # channels -> color type
+# decoded-frame cap shared with engine/kernel/jpeg.py: a header field
+# alone (PNG IHDR, JPEG SOF0) could otherwise make a decoder allocate
+# up to 65535² bytes per plane from a few hundred bytes of input
+MAX_IMAGE_PIXELS = 1 << 24  # 4096 x 4096
 
 
 def _chunk(tag: bytes, data: bytes) -> bytes:
@@ -36,6 +40,16 @@ def _chunk(tag: bytes, data: bytes) -> bytes:
         + data
         + struct.pack(">I", binascii.crc32(tag + data) & 0xFFFFFFFF)
     )
+
+
+def check_frame_size(width: int, height: int) -> None:
+    """Raise ValueError for a declared frame over MAX_IMAGE_PIXELS —
+    called on the header, before any pixel buffer exists."""
+    if width * height > MAX_IMAGE_PIXELS:
+        raise ValueError(
+            f"frame {width}x{height} exceeds MAX_IMAGE_PIXELS "
+            f"({MAX_IMAGE_PIXELS})"
+        )
 
 
 def _paeth(a: int, b: int, c: int) -> int:
@@ -141,6 +155,7 @@ def decode_png(data: bytes) -> tuple[int, int, int, bytes]:
                 raise ValueError("Adam7 interlace not supported")
             if comp != 0 or filt != 0:
                 raise ValueError("nonstandard compression/filter method")
+            check_frame_size(width, height)
             channels = _CHANNELS[color]
         elif tag == b"IDAT":
             idat += body
@@ -151,13 +166,18 @@ def decode_png(data: bytes) -> tuple[int, int, int, bytes]:
         raise ValueError("missing IHDR")
     if not seen_end:
         raise ValueError("missing IEND")
-    raw = zlib.decompress(bytes(idat))
     bpp = channels
     stride = width * channels
-    if len(raw) != (stride + 1) * height:
+    expected = (stride + 1) * height
+    # bounded inflate: a small IDAT cannot expand past what IHDR declares
+    try:
+        raw = zlib.decompressobj().decompress(bytes(idat), expected + 1)
+    except zlib.error as e:
+        raise ValueError(f"corrupt zlib stream: {e}") from e
+    if len(raw) != expected:
         raise ValueError(
-            f"decompressed stream is {len(raw)} bytes, expected "
-            f"{(stride + 1) * height}"
+            f"decompressed stream is {len(raw)}"
+            f"{'+' if len(raw) > expected else ''} bytes, expected {expected}"
         )
     out = bytearray()
     prev = bytes(stride)

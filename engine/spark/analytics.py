@@ -1,7 +1,8 @@
 """Training-data pipeline operators over documents/embeddings tables:
-deduplication (exact, MinHash+LSH, SimHash, n-gram Jaccard), similarity
-search (brute-force cosine, sign-bucketed IVF), and text analysis
-(language-ID heuristic, quality scoring, token counting, fingerprint).
+deduplication (exact, MinHash+LSH, SimHash, n-gram Jaccard, embedding
+and hash-embed cosine), similarity search (brute-force cosine, k-means
+centroid IVF, int8), and text analysis (language-ID heuristic, quality
+scoring, token counting, fingerprint).
 
 Design notes (100 TB path):
 - Everything here is native Catalyst expressions — no Python UDFs.
@@ -9,8 +10,11 @@ Design notes (100 TB path):
 - MinHash: shingle explode → 32-way min-agg (one shuffle, map-side
   partial agg) → band explode → bucket groupBy; candidate pairs only
   ever materialize within a bucket, never the cross product.
+- Near-dup bucket self-joins (MinHash bands, SimHash blocks, embedding
+  sign buckets, multimodal ahash bands) go through _bucketed_pairs and
+  its hub-star skew guard; rp_pair_sims is the one unguarded join left.
 - Brute-force ANN broadcasts the (small) query side so the big side
-  never shuffles; the IVF variant prunes by sign-bucket equality join.
+  never shuffles; the IVF variant prunes by centroid-cell equality join.
 """
 
 from __future__ import annotations
@@ -1213,60 +1217,6 @@ def simsearch_bruteforce(
     )
 
 
-def simsearch_ivf(
-    spark: "SparkSession",
-    sf_dir: str,
-    n_queries: int = 20,
-    sign_dims: int | None = None,
-    probes: int = 2,
-) -> "DataFrame":
-    """Scale path: multi-probe sign-bucket IVF. Probe p buckets vectors
-    by the signs of dims [p*sign_dims, (p+1)*sign_dims); a query scans
-    the union of its buckets across probes (bucket-equality joins, no
-    cross product), candidates dedupe before the cosine top-k.
-
-    sign_dims=None derives the bucket width from the corpus size
-    (adaptive_sign_dims: ≥ 2n bucket keys) so shuffle-key cardinality
-    scales with the data instead of pinning 2^6 keys at any size.
-
-    Measured on the random-gaussian sf0.01 embeddings vs brute force at
-    sign_dims=6: recall@3 = 0.05 (1 probe) → 0.15 (2) → 0.17 (3).
-    Random vectors are the worst case for sign bucketing (true
-    neighbors rarely share a full sign block); clustered real
-    embeddings bucket far better — recall@3 ≥ 0.8 on the clustered
-    fixture (test_analytics_quality). The probes knob trades ~linear
-    candidate cost for recall.
-    """
-    embs = _vecs(spark, sf_dir)
-    if sign_dims is None:
-        n, dim = _corpus_stats(embs)
-        sign_dims = adaptive_sign_dims(n, dim, probes)
-
-    cands = None
-    for pidx in range(probes):
-        b = embs.withColumn(
-            "bucket", _sign_bucket(F.col("v"), pidx * sign_dims, sign_dims)
-        )
-        queries = b.filter(F.col("vec_id") < n_queries).select(
-            F.col("vec_id").alias("query_id"), F.col("v").alias("q"), F.col("bucket")
-        )
-        c = b.join(F.broadcast(queries), "bucket").filter(
-            F.col("vec_id") != F.col("query_id")
-        ).select("query_id", "vec_id", "q", "v")
-        cands = c if cands is None else cands.unionByName(c)
-    # a pair can collide in several probes -> dedupe before scoring
-    cands = cands.dropDuplicates(["query_id", "vec_id"])
-    sims = cands.select(
-        "query_id", "vec_id", F.round(_cosine(F.col("q"), F.col("v")), 5).alias("cosine")
-    ).filter(F.col("cosine").isNotNull())  # zero-norm candidates excluded
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        sims.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 3)
-        .select("query_id", "vec_id", "cosine", F.col("rnk").cast("long").alias("rnk"))
-    )
-
-
 def _train_centroids(
     embs: "DataFrame", n_centroids: int, sample: int, iters: int
 ) -> list[list[float]]:
@@ -1376,12 +1326,12 @@ def simsearch_ivf_centroids(
     codebook: list[list[float]] | None = None,
 ) -> "DataFrame":
     """Standard centroid-quantizer IVF (the scale path real vector
-    stores use, vs the cheaper sign-bucket variant above): k-means
-    codebook trained on a driver-side sample, corpus assigned to its
-    nearest centroid with broadcast plan-literal arithmetic (one
-    map-only pass, no shuffle), queries probe their ``probes`` nearest
-    cells (explode → cell-equality join — candidates are cell-local,
-    never the cross product) and the cosine top-k runs per query.
+    stores use): k-means codebook trained on a driver-side sample,
+    corpus assigned to its nearest centroid with broadcast plan-literal
+    arithmetic (one map-only pass, no shuffle), queries probe their
+    ``probes`` nearest cells (explode → cell-equality join — candidates
+    are cell-local, never the cross product) and the cosine top-k runs
+    per query.
 
     Deterministic end-to-end (fixed sample order, init, iterations),
     so results are reproducible. The driver entry runs the served form
@@ -1442,19 +1392,41 @@ def dedup_embedding_cosine(
 ) -> "DataFrame":
     """Embedding-cosine near-duplicate pairs, multi-probe: probe p
     sign-buckets the vectors on dims [p*sign_dims, (p+1)*sign_dims)
-    (2^sign_dims buckets each), self-joins only within a bucket, and
-    the probes' candidate pairs are unioned + deduped before the
+    (2^sign_dims buckets each; the probe index sits in the bucket
+    key's high bits, as dedup_simhash does with its bands), pairs form
+    only within a bucket (_bucketed_pairs: oversized buckets pair as a
+    hub star), and the probes' candidate pairs are deduped before the
     cosine threshold. The bucket join is the 100 TB path — the cross
     product never materializes, and sign_dims=None scales the bucket
-    keyspace with the corpus (adaptive_sign_dims: ≥ 2n keys, so the
-    per-bucket self-join stays bounded at any size; max-bucket-size
-    asserted in tests). Threshold compares the 5-dp-rounded cosine so
-    the cut is FP-stable across engines."""
+    keyspace with the corpus (adaptive_sign_dims: ≥ 2n keys; max
+    bucket size asserted in tests). Zero-norm vectors (all-null after
+    _vecs) are dropped before bucketing: they pair with nothing, and
+    dropping them keeps bucket sizes identical to the DuckDB twin's.
+    Threshold compares the 5-dp-rounded cosine so the cut is FP-stable
+    across engines."""
     embs = _vecs(spark, sf_dir)
     if sign_dims is None:
         n, dim = _corpus_stats(embs)
         sign_dims = adaptive_sign_dims(n, dim, probes)
-    return _probe_pair_sims(embs, threshold, sign_dims, probes)
+    embs = embs.filter(F.try_element_at("v", F.lit(1)).isNotNull())
+    keys = [
+        F.lit(p << sign_dims) + _sign_bucket(F.col("v"), p * sign_dims, sign_dims)
+        for p in range(probes)
+    ]
+    banded = embs.select(
+        F.col("vec_id").alias("doc_id"), "v", F.explode(F.array(*keys)).alias("bucket")
+    )
+    pairs = (
+        _bucketed_pairs(banded, "v", LSH_MAX_BUCKET_DOCS)
+        # a pair can collide in several probes -> keep one row
+        .dropDuplicates(["doc_a", "doc_b"])
+        .select(
+            F.col("doc_a").alias("vec_a"),
+            F.col("doc_b").alias("vec_b"),
+            F.round(_cosine(F.col("pa"), F.col("pb")), 5).alias("cosine"),
+        )
+    )
+    return pairs.filter(F.col("cosine") >= threshold)
 
 
 def _floor_round5(col) -> "F.Column":
@@ -1465,40 +1437,6 @@ def _floor_round5(col) -> "F.Column":
     round 0.80409 — 22 of 1.1M pairs at sf0.1); the explicit formula
     removes the builtin from the contract."""
     return F.floor(col * F.lit(100000.0) + F.lit(0.5)) / F.lit(100000.0)
-
-
-def _probe_pair_sims(
-    embs: "DataFrame", threshold: float, sign_dims: int, probes: int,
-    rounder=None,
-) -> "DataFrame":
-    """Multi-probe sign-bucket pair join + round-5 cosine threshold
-    over any (vec_id, v) table — shared by dedup_embedding_cosine and
-    the text-side dedup_text_semantic composition. ``rounder``
-    overrides the 5-dp rounding expression (default F.round)."""
-    pairs = None
-    for pidx in range(probes):
-        b = embs.withColumn(
-            "bucket", _sign_bucket(F.col("v"), pidx * sign_dims, sign_dims)
-        )
-        a = b.select(
-            "bucket", F.col("vec_id").alias("vec_a"), F.col("v").alias("va")
-        )
-        c = b.select(
-            "bucket", F.col("vec_id").alias("vec_b"), F.col("v").alias("vb")
-        )
-        pp = a.join(c, "bucket").filter(F.col("vec_a") < F.col("vec_b")).select(
-            "vec_a", "vec_b", "va", "vb"
-        )
-        pairs = pp if pairs is None else pairs.unionByName(pp)
-    pairs = pairs.dropDuplicates(["vec_a", "vec_b"])
-    if rounder is None:
-        rounder = lambda c: F.round(c, 5)
-    sims = pairs.select(
-        "vec_a",
-        "vec_b",
-        rounder(_cosine(F.col("va"), F.col("vb"))).alias("cosine"),
-    )
-    return sims.filter(F.col("cosine") >= threshold)
 
 
 def dedup_apply_embeddings(
@@ -2319,6 +2257,22 @@ def corpus_prepare(
     return _pack_docs(kept, seq_len, n_shards)
 
 
+def _int8_codes(vec: str, bits_scale: int = 127) -> "F.Column":
+    """Symmetric int8 codes of array column ``vec`` against the row's
+    ``scale`` column (max |x|): round(x * bits_scale / scale), all-zero
+    codes when the scale is 0 (guarded division). The one quantizer
+    embedding_quantize and simsearch_int8 share."""
+    return F.transform(
+        vec,
+        lambda x: F.when(
+            F.col("scale") > 0,
+            F.round(x * F.lit(bits_scale) / F.col("scale"), 0),
+        )
+        .otherwise(F.lit(0.0))
+        .cast("int"),
+    )
+
+
 def embedding_quantize(
     spark: "SparkSession", sf_dir: str, bits_scale: int = 127
 ) -> "DataFrame":
@@ -2339,15 +2293,7 @@ def embedding_quantize(
     staged = staged.withColumn(
         "scale", F.array_max(F.transform("vec", lambda x: F.abs(x)))
     )
-    codes = F.transform(
-        "vec",
-        lambda x: F.when(
-            F.col("scale") > 0,
-            F.round(x * F.lit(bits_scale) / F.col("scale"), 0),
-        )
-        .otherwise(F.lit(0.0))
-        .cast("int"),
-    )
+    codes = _int8_codes("vec", bits_scale)
     recon_err = F.array_max(
         F.zip_with(
             "vec",
@@ -2551,15 +2497,7 @@ def simsearch_int8(
     ).select(
         "vec_id",
         "scale",
-        F.transform(
-            "v",
-            lambda x: F.when(
-                F.col("scale") > 0,
-                F.round(x * F.lit(127) / F.col("scale"), 0),
-            )
-            .otherwise(F.lit(0.0))
-            .cast("int"),
-        ).alias("codes"),
+        _int8_codes("v").alias("codes"),
     )
     q = base.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),
@@ -3070,7 +3008,7 @@ HASH_EMBED_DIM = 64
 
 def _hash_embed_sums(docs: "DataFrame", dim: int) -> "DataFrame":
     """(doc_id, bucket, v): exact-integer signed-count bucket sums —
-    the sparse core both hash_embed forms share."""
+    the sparse core hash_embed and hash_embed_vectors share."""
     words = docs.select(
         "doc_id",
         F.explode(
@@ -3094,82 +3032,11 @@ def _hash_embed_sums(docs: "DataFrame", dim: int) -> "DataFrame":
     )
 
 
-def hash_embed_batch(
-    docs: "DataFrame", dim: int = HASH_EMBED_DIM
-) -> "DataFrame":
-    """Signed feature-hashing text embedding [Weinberger et al., ICML'09
-    "Feature Hashing for Large Scale Multitask Learning"] — the
-    in-engine text → vector path: every word hashes to a bucket and a
-    sign, the signed counts accumulate per bucket, and the vector is
-    L2-normalized. No external model, no Python in the plan — the
-    embedding a 100 TB pipeline can afford for cheap near-dup/cluster
-    passes before spending GPU money, and it composes with the whole
-    ANN stack (same array<double> shape as the embeddings table).
-
-    Scale shape: two-level aggregation — (doc, bucket) partial sums
-    absorb word repeats map-side, then one per-doc collect of ≤ dim
-    (bucket, sum) entries builds the dense vector via a map lookup;
-    shuffle volume ∝ docs × distinct buckets hit (≤ dim), never words.
-    Exactness: bucket sums are INTEGER (signed counts), so the only FP
-    is the final norm divide, rounded to 6 dp on both engines; the
-    sign bit comes from the same portable md5 the rest of the LSH
-    stack uses, so the twin is bit-identical. Zero vectors (no words,
-    or full sign cancellation) stay all-zero rather than dividing by
-    a zero norm."""
-    sums = _hash_embed_sums(docs, dim)
-    # dense feeds BOTH the output vectors and the missing-doc anti-join;
-    # a lazy localCheckpoint stops the explode+agg subtree re-executing
-    # per consumer (the dedup_incremental/source_keywords defect class)
-    dense = sums.groupBy("doc_id").agg(
-        F.map_from_arrays(
-            F.collect_list("bucket"), F.collect_list("v")
-        ).alias("m")
-    ).localCheckpoint(eager=False)
-    # try_element_at: ANSI mode makes plain element_at RAISE on a
-    # missing map key, and most docs miss some of the dim buckets.
-    # STAGED projections (the repetition_metrics lesson): vec and norm
-    # materialize as column attributes before the per-element divide —
-    # inlined, the norm (an aggregate over the 64-slot transform) would
-    # re-evaluate inside every element's lambda (higher-order fns are
-    # codegen-fallback, nothing rescues the duplication; measured 9 s →
-    # sub-second at sf0.1 for the driver form).
-    vec = F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda i: F.coalesce(
-            F.try_element_at("m", i.cast("int")), F.lit(0)
-        ).cast("double"),
-    )
-    staged = dense.select("doc_id", vec.alias("vec")).select(
-        "doc_id",
-        "vec",
-        F.sqrt(
-            F.aggregate("vec", F.lit(0.0), lambda acc, x: acc + x * x)
-        ).alias("nrm"),
-    )
-    out = staged.select(
-        "doc_id",
-        F.when(
-            F.col("nrm") > 0,
-            F.transform("vec", lambda x: F.round(x / F.col("nrm"), 6)),
-        )
-        .otherwise(F.transform("vec", lambda x: x * 0.0))
-        .alias("embedding"),
-    )
-    # docs with no words at all still get a zero vector
-    zero = F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)), lambda i: i * F.lit(0.0)
-    )
-    missing = docs.select("doc_id").join(
-        dense.select("doc_id"), "doc_id", "left_anti"
-    ).select("doc_id", zero.alias("embedding"))
-    return out.unionByName(missing)
-
-
 def hash_embed(
     spark: "SparkSession", sf_dir: str, dim: int = HASH_EMBED_DIM
 ) -> "DataFrame":
     """Driver-query form: the nonzero (doc_id, pos, value) entries of
-    hash_embed_batch's vectors — emitted SPARSELY from the bucket sums
+    hash_embed_vectors' ``v`` — emitted SPARSELY from the bucket sums
     (no dense assembly, no posexplode: a Generate whose input is the
     64-slot interpreted transform cost 4.75 s at sf0.1; the sparse join
     form runs sub-second and is exactly what the DuckDB twin computes).
@@ -3189,40 +3056,6 @@ def hash_embed(
             F.round(vd / F.col("nrm"), 6).alias("value"),
         )
         .filter(F.col("value") != 0.0)
-    )
-
-
-def dedup_text_semantic(
-    spark: "SparkSession",
-    sf_dir: str,
-    threshold: float = 0.9,
-    sign_dims: int = 6,
-    probes: int = 2,
-) -> "DataFrame":
-    """SEMANTIC text near-dup pairs with no external model: feature-
-    hash embeddings (hash_embed_batch — unit vectors, exact integer
-    bucket sums) fed straight into the multi-probe sign-bucket cosine
-    machinery. The composition a pipeline without GPU embeddings runs:
-    text in → near-dup pairs out, every stage native Catalyst and the
-    whole chain one DuckDB twin. Word-swap edits that break exact
-    13-grams barely move the hashed bag-of-words, so this catches the
-    same class as MinHash at a different operating point (order-
-    insensitive: it also pairs shuffled-word rewrites MinHash misses).
-    Scale: identical to dedup_embedding_cosine — bucket-local joins,
-    never a cross product; sign_dims pinned to 6 for the static oracle
-    (production would pass adaptive_sign_dims)."""
-    vecs = (
-        hash_embed_batch(_docs(spark, sf_dir))
-        .select(F.col("doc_id").alias("vec_id"), F.col("embedding").alias("v"))
-        # zero vectors (wordless docs) carry no direction — exclude,
-        # like _vecs' zero-norm sentinel handling
-        .filter(F.aggregate("v", F.lit(0.0), lambda a, x: a + x * x) > 0)
-    )
-    # floor-based rounding: this op's dense same-generator corpus puts
-    # dozens of pairs within an ulp of a 5-dp boundary, where engine
-    # round() builtins disagree (_floor_round5)
-    return _probe_pair_sims(
-        vecs, threshold, sign_dims, probes, rounder=_floor_round5
     )
 
 
@@ -3284,15 +3117,21 @@ def _rp_sign(probe: int, bit: int, j: int) -> int:
 def hash_embed_vectors(
     docs: "DataFrame", dim: int = HASH_EMBED_DIM
 ) -> "DataFrame":
-    """The servable hash-embed artifact: (vec_id, v, w) for every doc
-    with at least one word surviving sign cancellation — ``v`` the
-    round-6 L2-normalized double vector (identical math to
-    hash_embed_batch, parity-tested) and ``w`` the RAW signed integer
-    counts. ``w`` exists so downstream hyperplane bucketing can run on
-    exact integer dots: sign(dot(v, plane)) == sign(dot(w, plane))
-    because the norm is a positive scalar, and an integer dot is
-    order-insensitive — any engine, any aggregation order, same bucket
-    bit. That removes FP fold order from the bucketing contract
+    """Signed feature-hashing text embedding [Weinberger et al., ICML'09
+    "Feature Hashing for Large Scale Multitask Learning"] — the
+    in-engine text → vector path: every word hashes to a bucket and a
+    sign, the signed counts accumulate per bucket, and the vector is
+    L2-normalized. No external model, no Python in the plan.
+
+    The servable artifact: (vec_id, v, w) for every doc with at least
+    one word surviving sign cancellation — ``v`` the round-6
+    L2-normalized double vector (its nonzero entries are exactly the
+    oracled hash_embed rows, test-asserted) and ``w`` the RAW signed
+    integer counts. ``w`` exists so downstream hyperplane bucketing can
+    run on exact integer dots: sign(dot(v, plane)) == sign(dot(w,
+    plane)) because the norm is a positive scalar, and an integer dot
+    is order-insensitive — any engine, any aggregation order, same
+    bucket bit. That removes FP fold order from the bucketing contract
     entirely (it remains only in the final cosine, where both engines
     run the same explicit left fold)."""
     sums = _hash_embed_sums(docs, dim)
@@ -3307,8 +3146,8 @@ def hash_embed_vectors(
             F.try_element_at("m", i.cast("int")), F.lit(0)
         ).cast("long"),
     )
-    # integer norm²: exact, so nrm and the rounded v match
-    # hash_embed_batch bit-for-bit (same sqrt input)
+    # integer norm²: exact, so nrm and the rounded v match hash_embed
+    # bit-for-bit (same sqrt input)
     staged = dense.select(F.col("doc_id").alias("vec_id"), wcol.alias("w")).select(
         "vec_id",
         "w",
@@ -3348,7 +3187,9 @@ def rp_pair_sims(
     Candidate pairs travel as (vec_a, vec_b) IDS ONLY through the
     bucket self-join + distinct — the 64-double vectors re-join after
     dedup — so the collision shuffle is ~16 bytes/pair, and only
-    surviving pairs pay the 64-dim cosine fold."""
+    surviving pairs pay the 64-dim cosine fold. The bucket self-join
+    is all-pairs with no hub-star guard (measured bucket sizes in
+    dedup_text_semantic_served)."""
     spark = vecs.sparkSession
     proj = spark.createDataFrame(
         [
@@ -3404,16 +3245,21 @@ def dedup_text_semantic_served(
     target_recall: float = 0.85,
     params: tuple[int, int] | None = None,
 ) -> "DataFrame":
-    """dedup_text_semantic at its PRODUCTION operating point: nonzero
-    hash-embed unit vectors materialized once as a parquet artifact
-    (the IVF-codebook serve pattern), bucketed by random-hyperplane
-    LSH with (sign_dims, probes) from rp_lsh_params — balanced buckets
-    at any corpus skew, keyspace ≥ 2n, recall bought back with probes.
-    The pinned sign_dims=6 coordinate-sign form above exists for its
-    fully-static oracle and costs ~60 s at sf0.1 on this dense corpus;
-    this is the form a pipeline runs. One count() over the slim
-    artifact picks the plan — the same AQE-style planning read
-    _corpus_stats does."""
+    """Semantic text near-dup pairs with no external model: nonzero
+    hash-embed unit vectors (hash_embed_vectors) materialized once as
+    a parquet artifact (the IVF-codebook serve pattern), bucketed by
+    random-hyperplane LSH with (sign_dims, probes) from rp_lsh_params
+    — keyspace ≥ 2n, recall bought back with probes. Bag-of-words is
+    order-insensitive, so it also pairs shuffled-word rewrites MinHash
+    shingles miss. One count() over the slim artifact picks the plan —
+    the same AQE-style planning read _corpus_stats does.
+
+    Buckets are NOT balanced on this corpus: hyperplane bits are fair
+    coins per plane, but same-generator docs still cluster. Measured
+    on the hash-embed artifact, the largest bucket holds 122 of 500
+    docs at sf0.01 (8 buckets over LSH_MAX_BUCKET_DOCS) and 501 of
+    5,000 at sf0.1 (180 over; 2.6M raw candidate pairs), and
+    rp_pair_sims has no hub-star guard yet."""
     vecs = spark.read.parquet(vectors_path).select("vec_id", "v", "w")
     if params is None:
         params = rp_lsh_params(vecs.count(), threshold, target_recall)

@@ -348,51 +348,41 @@ def image_dedup_near(
     one per band and be missed, so a caller raising max_hamming above
     3 accepts probabilistic recall, same trade the text simhash
     documents. Band-equality joins propose candidates and an exact
-    popcount(xor) verifies — never an all-pairs comparison. Shuffle
-    keys are (band_idx, band_value): high-cardinality for real image
-    corpora; a pathological constant-band corpus degrades exactly like
-    simhash's documented boilerplate case.
+    popcount(xor) verifies — never an all-pairs comparison. The bucket
+    key is ``band << 16 | band_val``, paired by _bucketed_pairs: a
+    bucket of more than LSH_MAX_BUCKET_DOCS images (a corpus of
+    identical blank images) pairs as a star around its min media_id,
+    O(bucket) pairs with the same connected components, exactly like
+    simhash's boilerplate case.
 
     Emits verified pairs (media_id_a < media_id_b, hamming)."""
-    hashes = image_hashes(df)
-    bands = hashes.select(
-        "media_id",
+    from engine.spark.analytics import LSH_MAX_BUCKET_DOCS, _bucketed_pairs
+
+    banded = image_hashes(df).select(
+        F.col("media_id").alias("doc_id"),
         "ahash",
-        F.posexplode(
+        F.explode(
             F.array(
                 *[
-                    F.shiftright(F.col("ahash"), i * 16).bitwiseAND(
-                        F.lit(0xFFFF)
-                    )
-                    for i in range(4)
+                    F.shiftright(F.col("ahash"), band * 16)
+                    .bitwiseAND(F.lit(0xFFFF))
+                    .bitwiseOR(F.lit(band << 16))
+                    for band in range(4)
                 ]
             )
-        ).alias("band", "band_val"),
-    )
-    a = bands.select(
-        F.col("media_id").alias("media_id_a"),
-        F.col("ahash").alias("ha"),
-        "band",
-        "band_val",
-    )
-    b = bands.select(
-        F.col("media_id").alias("media_id_b"),
-        F.col("ahash").alias("hb"),
-        "band",
-        "band_val",
+        ).alias("bucket"),
     )
     pairs = (
-        a.join(b, ["band", "band_val"])
-        .filter(F.col("media_id_a") < F.col("media_id_b"))
-        .select("media_id_a", "media_id_b", "ha", "hb")
-        .distinct()
+        _bucketed_pairs(banded, "ahash", LSH_MAX_BUCKET_DOCS)
+        # a pair can collide in several bands -> keep one row
+        .dropDuplicates(["doc_a", "doc_b"])
+        .select(
+            F.col("doc_a").alias("media_id_a"),
+            F.col("doc_b").alias("media_id_b"),
+            F.bit_count(F.col("pa").bitwiseXOR(F.col("pb"))).alias("hamming"),
+        )
     )
-    ham = F.bit_count(
-        F.col("ha").bitwiseXOR(F.col("hb"))
-    ).alias("hamming")
-    return pairs.select("media_id_a", "media_id_b", ham).filter(
-        F.col("hamming") <= max_hamming
-    )
+    return pairs.filter(F.col("hamming") <= max_hamming)
 
 
 def frame_sample(df: "DataFrame", every_n: int = 32) -> "DataFrame":

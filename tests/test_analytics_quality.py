@@ -182,38 +182,67 @@ def test_dedup_embedding_adaptive_default_finds_planted(spark, tmp_path):
         assert p in pairs, p
 
 
-def test_ivf_recall_on_clustered_embeddings(spark, tmp_path):
-    """Recall floor on realistically clustered vectors: members of a
-    cluster share nearly every hyperplane sign, so sign-bucket IVF must
-    reach recall@3 ≥ 0.8 (random-gaussian corpora are the worst case
-    and are covered by the multiprobe-improvement test below)."""
+def test_dedup_embedding_cosine_planted_hub(spark, tmp_path):
+    """70 identical vectors (> LSH_MAX_BUCKET_DOCS) share one sign
+    bucket per probe: the guarded bucket join pairs them as a star
+    around the min vec_id, N-1 pairs instead of N(N-1)/2, and the
+    keep-list equals the one brute-force all-pairs components give
+    (the zero-norm row pairs with nothing and survives)."""
+    import math
     import random
 
-    from engine.spark.analytics import simsearch_bruteforce, simsearch_ivf
+    from engine.spark.analytics import (
+        LSH_MAX_BUCKET_DOCS,
+        dedup_apply_embeddings,
+        dedup_embedding_cosine,
+    )
 
-    rng = random.Random(11)
-    dim, n_clusters, per_cluster = 32, 40, 10
-    centers = [
-        [rng.gauss(0, 1) for _ in range(dim)] for _ in range(n_clusters)
-    ]
-    rows = []
-    for i in range(n_clusters * per_cluster):
-        c = centers[i % n_clusters]
-        rows.append((i, [x + rng.gauss(0, 0.02) for x in c]))
+    rng = random.Random(21)
+    dim, n_hub = 32, 70
+    assert n_hub > LSH_MAX_BUCKET_DOCS
+    hub = [rng.gauss(0, 1) for _ in range(dim)]
+    hub_ids = set(range(100, 100 + n_hub))
+    rows = [(i, hub) for i in sorted(hub_ids)]
+    rows += [(i, [rng.gauss(0, 1) for _ in range(dim)]) for i in range(40)]
+    rows.append((999, [0.0] * dim))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = str(tmp_path / "clustered")
+    out = str(tmp_path / "embdir")
     df.coalesce(1).write.mode("overwrite").parquet(f"{out}/embeddings.parquet")
 
-    truth = {
-        (r.query_id, r.vec_id)
-        for r in simsearch_bruteforce(spark, out, n_queries=20, k=3).collect()
+    pairs = {
+        (r.vec_a, r.vec_b): r.cosine
+        for r in dedup_embedding_cosine(spark, out, threshold=0.9).collect()
     }
-    got = {
-        (r.query_id, r.vec_id)
-        for r in simsearch_ivf(spark, out, n_queries=20).collect()
+    hub_pairs = {p for p in pairs if p[0] in hub_ids and p[1] in hub_ids}
+    assert hub_pairs == {(100, m) for m in hub_ids - {100}}
+    assert all(pairs[p] == 1.0 for p in hub_pairs)
+
+    # brute-force all-pairs components -> keepers = component minima
+    def unit(v):
+        n = math.sqrt(sum(x * x for x in v))
+        return [x / n for x in v] if n else None
+
+    vecs = {i: unit(v) for i, v in rows}
+    parent = {i: i for i in vecs}
+
+    def find(i):
+        while parent[i] != i:
+            i = parent[i]
+        return i
+
+    ids = sorted(i for i, v in vecs.items() if v)
+    for ai, a in enumerate(ids):
+        for b in ids[ai + 1:]:
+            if sum(x * y for x, y in zip(vecs[a], vecs[b])) >= 0.9:
+                ra, rb = find(a), find(b)
+                parent[max(ra, rb)] = min(ra, rb)
+    expected = {i for i in vecs if find(i) == i}
+    assert 999 in expected and 100 in expected and 101 not in expected
+    kept = {
+        r.vec_id
+        for r in dedup_apply_embeddings(spark, out, threshold=0.9).collect()
     }
-    recall = len(got & truth) / len(truth)
-    assert recall >= 0.8, f"clustered recall@3 {recall:.2f}"
+    assert kept == expected
 
 
 def test_adaptive_n_centroids_scales():
@@ -269,28 +298,6 @@ def test_centroid_ivf_recall_and_determinism(spark, tmp_path):
     pairs = {(q, v) for q, v, _, _ in got1}
     recall = len(pairs & truth) / len(truth)
     assert recall >= 0.9, f"centroid recall@3 {recall:.2f}"
-
-
-def test_ivf_multiprobe_improves_recall(spark):
-    """Multi-probe sign-bucket IVF must strictly improve recall@3 vs a
-    single probe on the (deterministic) sf0.01 embeddings, measured
-    against brute-force ground truth (known: 0.05 -> 0.15)."""
-    from engine.spark.analytics import simsearch_bruteforce, simsearch_ivf
-
-    sf = "/root/testdata/sf0.01"
-    truth = {
-        (r.query_id, r.vec_id)
-        for r in simsearch_bruteforce(spark, sf, n_queries=20, k=3).collect()
-    }
-    one = {
-        (r.query_id, r.vec_id)
-        for r in simsearch_ivf(spark, sf, sign_dims=6, probes=1).collect()
-    }
-    two = {
-        (r.query_id, r.vec_id)
-        for r in simsearch_ivf(spark, sf, sign_dims=6, probes=2).collect()
-    }
-    assert len(two & truth) > len(one & truth)
 
 
 def test_dedup_clusters_chain_merge(spark):
@@ -1602,39 +1609,6 @@ def test_dedup_report_planted(spark, planted_dir):
     assert row.dup_fraction == round(row.n_dropped / row.n_docs, 6)
 
 
-def test_hash_embed_batch_invariants(spark):
-    """Feature-hash embeddings: unit L2 norm for any doc with words,
-    identical text -> identical vector (so near-dup cosine works on
-    them), a doc with no words -> the zero vector (not a crash or a
-    missing row), and the output shape composes with the ANN stack
-    (fixed dim, array<double>)."""
-    import math
-
-    from engine.spark.analytics import HASH_EMBED_DIM, hash_embed_batch
-
-    docs = spark.createDataFrame(
-        [
-            (1, "alpha beta gamma alpha"),
-            (2, "alpha beta gamma alpha"),     # exact dup of 1
-            (3, "totally different words here entirely"),
-            (4, "   "),                        # whitespace-only
-        ],
-        "doc_id long, text string",
-    )
-    rows = {r.doc_id: list(r.embedding) for r in hash_embed_batch(docs).collect()}
-    assert set(rows) == {1, 2, 3, 4}
-    assert all(len(v) == HASH_EMBED_DIM for v in rows.values())
-    assert rows[1] == rows[2]
-    assert rows[1] != rows[3]
-    for d in (1, 2, 3):
-        assert abs(math.sqrt(sum(x * x for x in rows[d])) - 1.0) < 1e-6
-    assert rows[4] == [0.0] * HASH_EMBED_DIM
-    # cosine of the exact dup pair is 1.0 — the embedding is usable as
-    # the dedup_embedding_cosine / simsearch input directly
-    dot = sum(a * b for a, b in zip(rows[1], rows[2]))
-    assert abs(dot - 1.0) < 1e-6
-
-
 def test_rp_lsh_params_keyspace_and_recall():
     """Random-hyperplane plan maths: the keyspace always dominates the
     corpus (≥ 2n keys up to the width cap), probes stay bounded, and
@@ -1662,34 +1636,61 @@ def test_rp_lsh_params_keyspace_and_recall():
     assert rp_lsh_params(10**6, 0.0)[1] >= 1
 
 
-def test_hash_embed_vectors_parity_with_batch(spark):
-    """The servable (vec_id, v, w) artifact must agree with
-    hash_embed_batch bit-for-bit on v (same norm input, same round-6),
-    carry exact integer counts in w (norm² over w == the float norm²),
-    and drop exactly the zero-norm docs the batch form zero-fills."""
+def _hash_embed_docs(spark):
+    rng = random.Random(3)
+    vocab = [f"w{i}" for i in range(300)]
+    rows = [
+        (1, "alpha beta gamma alpha"),
+        (2, "alpha beta gamma alpha"),     # exact dup of 1
+        (3, "totally different words here entirely"),
+        (4, "   "),                        # whitespace-only
+    ] + [
+        (i, " ".join(rng.choice(vocab) for _ in range(rng.randint(1, 60))))
+        for i in range(10, 210)
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def test_hash_embed_vectors_invariants(spark):
+    """The servable (vec_id, v, w) artifact: unit-norm ``v``, identical
+    text -> identical ``v`` (so near-dup cosine works on it), no row
+    for a wordless doc, and ``v == round(w / |w|, 6)`` over exact
+    integer counts ``w``."""
     import math
 
-    from engine.spark.analytics import hash_embed_batch, hash_embed_vectors
+    from engine.spark.analytics import HASH_EMBED_DIM, hash_embed_vectors
 
-    docs = spark.createDataFrame(
-        [
-            (1, "alpha beta gamma alpha"),
-            (2, "totally different words here entirely"),
-            (3, "   "),  # no words → no artifact row
-        ],
-        "doc_id long, text string",
-    )
-    batch = {r.doc_id: list(r.embedding) for r in hash_embed_batch(docs).collect()}
+    docs = _hash_embed_docs(spark)
     art = {r.vec_id: (list(r.v), list(r.w)) for r in hash_embed_vectors(docs).collect()}
-    assert set(art) == {1, 2}  # doc 3 has zero norm → excluded
-    for vid, (v, w) in art.items():
-        assert v == batch[vid]
+    assert 4 not in art and {1, 2, 3} <= set(art)
+    assert art[1] == art[2]
+    assert art[1][0] != art[3][0]
+    for v, w in art.values():
+        assert len(v) == len(w) == HASH_EMBED_DIM
+        assert abs(math.sqrt(sum(x * x for x in v)) - 1.0) < 1e-5
         assert all(isinstance(x, int) for x in w)
-        n2 = sum(x * x for x in w)
-        assert n2 > 0
-        # v is w / sqrt(n2) rounded to 6 dp — same math as the batch
-        nrm = math.sqrt(float(n2))
+        nrm = math.sqrt(float(sum(x * x for x in w)))
         assert v == [round(x / nrm, 6) for x in w]
+
+
+def test_hash_embed_vectors_parity_with_oracle(spark, tmp_path):
+    """The nonzero ``v`` entries of the artifact are exactly the
+    DuckDB-oracled hash_embed entry's (doc_id, pos, value) rows on the
+    same documents table."""
+    from engine.spark.analytics import hash_embed, hash_embed_vectors
+
+    docs = _hash_embed_docs(spark)
+    path = str(tmp_path / "docs")
+    docs.coalesce(1).write.parquet(f"{path}/documents.parquet")
+    sparse = {
+        (r.vec_id, pos, x)
+        for r in hash_embed_vectors(docs).collect()
+        for pos, x in enumerate(r.v)
+        if x != 0.0
+    }
+    assert sparse
+    oracled = {(r.doc_id, r.pos, r.value) for r in hash_embed(spark, path).collect()}
+    assert sparse == oracled
 
 
 def test_dedup_text_semantic_served_planted(spark, tmp_path):
@@ -1845,36 +1846,3 @@ def test_quality_classifier_entry_beats_baseline(spark):
     assert 0 < kept < n
 
 
-def test_dedup_text_semantic_planted(spark, tmp_path):
-    """Text-only semantic near-dups: an exact copy pairs at cosine 1.0,
-    a SHUFFLED-WORD rewrite (which MinHash shingles treat as a
-    different document) still pairs at high cosine — the
-    order-insensitive complement — and an unrelated doc pairs with
-    nothing."""
-    import random
-
-    from engine.spark.analytics import dedup_text_semantic
-
-    rng = random.Random(5)
-    words = [f"tok{i}" for i in range(80)]
-    shuffled = list(words)
-    rng.shuffle(shuffled)
-    rows = [
-        (1, " ".join(words), "en", "s", 0),
-        (2, " ".join(words), "en", "s", 0),          # exact copy
-        (3, " ".join(shuffled), "en", "s", 0),       # word-order rewrite
-        (4, " ".join(f"zzz{i}" for i in range(80)), "en", "s", 0),
-    ]
-    df = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    path = str(tmp_path / "docs")
-    df.coalesce(1).write.parquet(f"{path}/documents.parquet")
-    pairs = {
-        (r.vec_a, r.vec_b): r.cosine
-        for r in dedup_text_semantic(spark, path).collect()
-    }
-    assert pairs[(1, 2)] == 1.0
-    # bag-of-words is order-insensitive: shuffled text = identical vector
-    assert pairs[(1, 3)] == 1.0 and pairs[(2, 3)] == 1.0
-    assert not any(4 in p for p in pairs)

@@ -187,9 +187,21 @@ def test_oracle_keys_subset_of_queries():
     assert set(entry_mod.oracle_sql()) <= set(entry_mod.queries())
 
 
+def test_every_unoracled_entry_is_kernel_gated():
+    """The entry contract: every queries() entry has a DuckDB twin
+    except the two kernel-backed extraction projections, gated by the
+    per-turn Spark == kernel equality tests and cross-checked by the
+    extract_spans_consistency oracle."""
+    assert set(entry_mod.queries()) - set(entry_mod.oracle_sql()) == {
+        "extract_spans",
+        "extract_turns_scalar",
+    }
+
+
 def test_rows_only_queries_run(spark):
-    """Queries intentionally without an oracle still must execute and
-    return a stable schema at small scale."""
+    """The two LSH entries (oracled at sf0.01 above) must also execute
+    and return a schema at sf0.001, a scale the oracle gate never
+    runs: tiny corpora leave most band buckets with a single doc."""
     qs = entry_mod.queries()
     for name in ("dedup_minhash_lsh", "dedup_simhash"):
         df = qs[name](spark, "/root/testdata/sf0.001")

@@ -218,3 +218,23 @@ def test_ahash_of_corrupt_jpeg_is_none():
     assert _ahash64(blob) is not None
     for marker in (0xC0, 0xDD, 0xDA):
         assert _ahash64(_with_segment_body(blob, marker, b"")) is None
+
+
+def test_oversized_sof0_rejected_before_allocation():
+    """A SOF0 declaring 65535x65535 is refused by the shared
+    MAX_IMAGE_PIXELS cap before any component plane is allocated, and
+    image hashing maps it to None."""
+    import time
+
+    from engine.spark.multimodal import _ahash64
+
+    blob = encode_jpeg(16, 16, _luma_gradient(16, 16), quality=80)
+    i = blob.index(b"\xff\xc0")
+    body = bytearray(blob[i + 4 : i + 4 + struct.unpack(">H", blob[i + 2 : i + 4])[0] - 2])
+    body[1:5] = struct.pack(">HH", 65535, 65535)
+    huge = _with_segment_body(blob, 0xC0, bytes(body))
+    t0 = time.perf_counter()
+    with pytest.raises(ValueError, match="MAX_IMAGE_PIXELS"):
+        decode_jpeg(huge)
+    assert _ahash64(huge) is None
+    assert time.perf_counter() - t0 < 1.0

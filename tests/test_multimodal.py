@@ -195,6 +195,50 @@ def test_image_dedup_near_real_pixels(spark):
     assert not any(4 in p for p in pairs)  # unrelated never pairs
 
 
+def test_image_dedup_near_planted_hub(spark):
+    """70 identical blank images (> LSH_MAX_BUCKET_DOCS) share all four
+    band buckets: the guarded join pairs them as a star around the min
+    media_id (N-1 pairs, not N(N-1)/2) with the same connected
+    components, while a small bucket (two copies of a checkerboard)
+    still pairs all-pairs."""
+    import datetime as dt
+
+    from engine.kernel.png import encode_png
+    from engine.spark.analytics import LSH_MAX_BUCKET_DOCS, dedup_clusters
+    from engine.spark.multimodal import image_dedup_near
+
+    w, h, n_hub = 16, 16, 70
+    assert n_hub > LSH_MAX_BUCKET_DOCS
+    blank = encode_png(w, h, bytes([128]) * (w * h), channels=1)
+    checker = encode_png(
+        w, h, bytes(((x // 4 + y // 4) % 2) * 200 for y in range(h) for x in range(w)),
+        channels=1,
+    )
+    ts = dt.datetime(2025, 1, 1, tzinfo=dt.timezone.utc)
+    hub_ids = list(range(100, 100 + n_hub))
+    rows = [(i, "image", bytearray(blank), "s", ts) for i in hub_ids]
+    rows += [(i, "image", bytearray(checker), "s", ts) for i in (0, 1)]
+    media = spark.createDataFrame(
+        rows,
+        "media_id long, kind string, payload binary, source string, "
+        "ts timestamp",
+    )
+    pairs_df = image_dedup_near(media)
+    pairs = {(r.media_id_a, r.media_id_b): r.hamming for r in pairs_df.collect()}
+    assert set(pairs) == {(100, m) for m in hub_ids[1:]} | {(0, 1)}
+    assert set(pairs.values()) == {0}
+    clusters = {
+        r.doc_id: r.cluster_id
+        for r in dedup_clusters(
+            pairs_df.select(
+                F.col("media_id_a").alias("doc_a"),
+                F.col("media_id_b").alias("doc_b"),
+            )
+        ).collect()
+    }
+    assert clusters == {**{i: 100 for i in hub_ids}, 0: 0, 1: 0}
+
+
 def test_real_png_resize_roundtrip(spark):
     """Real-arm resize: decoded output PNGs must equal an
     independently-computed nearest-neighbor resample of the true

@@ -106,3 +106,53 @@ def test_multi_idat_accepted():
         + chunk(b"IEND", b"")
     )
     assert decode_png(blob) == (w, h, ch, px)
+
+
+def _png(ihdr: bytes, idat: bytes) -> bytes:
+    """Signature + IHDR + one IDAT + IEND, every CRC valid."""
+    import binascii
+
+    def chunk(tag: bytes, body: bytes) -> bytes:
+        crc = binascii.crc32(tag + body) & 0xFFFFFFFF
+        return struct.pack(">I", len(body)) + tag + body + struct.pack(">I", crc)
+
+    return (
+        b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr) + chunk(b"IDAT", idat)
+        + chunk(b"IEND", b"")
+    )
+
+
+def test_oversized_ihdr_rejected_before_allocation():
+    """A 65535x65535 IHDR is refused by the shared MAX_IMAGE_PIXELS cap
+    on the header alone, and image hashing maps it to None; a frame at
+    the cap passes the size check and fails on its stream instead."""
+    import time
+
+    from engine.kernel.png import MAX_IMAGE_PIXELS
+    from engine.spark.multimodal import _ahash64
+
+    idat = zlib.compress(b"\x00" * 64)
+    huge = _png(struct.pack(">IIBBBBB", 65535, 65535, 8, 0, 0, 0, 0), idat)
+    t0 = time.perf_counter()
+    with pytest.raises(ValueError, match="MAX_IMAGE_PIXELS"):
+        decode_png(huge)
+    assert _ahash64(huge) is None
+    assert time.perf_counter() - t0 < 1.0
+    at_cap = _png(struct.pack(">IIBBBBB", MAX_IMAGE_PIXELS // 4096, 4096, 8, 0, 0, 0, 0), idat)
+    with pytest.raises(ValueError, match="decompressed stream"):
+        decode_png(at_cap)
+
+
+def test_idat_inflate_bounded_and_corrupt_stream_is_valueerror():
+    """IDAT inflates only as far as IHDR declares (a 16 MB zlib bomb
+    behind a 4x4 header stops at 21 bytes), and truncated or corrupt
+    deflate data raises ValueError, the one exception image hashing
+    catches."""
+    ihdr = struct.pack(">IIBBBBB", 4, 4, 8, 0, 0, 0, 0)
+    with pytest.raises(ValueError, match="21\\+ bytes, expected 20"):
+        decode_png(_png(ihdr, zlib.compress(b"\x00" * (16 << 20))))
+    good = zlib.compress(bytes(20))
+    with pytest.raises(ValueError):
+        decode_png(_png(ihdr, good[:-6]))
+    with pytest.raises(ValueError, match="corrupt zlib"):
+        decode_png(_png(ihdr, b"\x78\x9c\xff\xff\xff\xff"))
