@@ -15,6 +15,8 @@ for the Iceberg MERGE variant used when a catalog is configured):
                                     parsed, empty-extraction rate, one
                                     file per committed slice
     manifests/part-K.json         — lineage manifest per partition
+    errors/*.parquet              — malformed input rows with their
+                                    reason (pipeline.split_valid)
 
 Commit protocol: each slice costs one Spark job, the partitioned
 results write. Its bookkeeping is file I/O on the Spark driver, on
@@ -28,6 +30,11 @@ LAST — a crash before the checkpoint rename redoes the slice
 (idempotent overwrite), never skips it. The record files keep the
 column names and types Spark wrote in earlier versions, so output dirs
 holding Spark-written records still resume and read back as one table.
+The errors table is written once per run, before its first slice, in
+the first leg that finds no checkpoint of the run: if any checkpoint
+exists, an earlier leg already wrote the complete errors table, so a
+resume leg does not rewrite it. A leg that crashes before its first
+checkpoint leaves none, and the next launch rewrites the table.
 
 Resume protocol: the driver reads the completed part_ids of its run
 from the checkpoint files and extracts only the rows whose part_id is
@@ -128,10 +135,12 @@ def run_checkpointed(
     if not todo:
         return spark.read.parquet(results_dir)
 
-    # P2: route malformed rows to the errors table instead of dropping
+    # P2: route malformed rows to the errors table instead of dropping;
+    # a checkpoint means an earlier leg already wrote the whole table
     transcripts, errors = split_valid(transcripts)
-    errors.write.mode("overwrite").parquet(f"{out_dir}/errors")
-    if done:
+    if not done:
+        errors.write.mode("overwrite").parquet(f"{out_dir}/errors")
+    else:
         # a resume extracts only the partitions still to do
         transcripts = transcripts.filter(part_expr(num_partitions).isin(todo))
 

@@ -35,6 +35,8 @@ from typing import TYPE_CHECKING
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from engine.spark.stage import worker_setup
+
 if TYPE_CHECKING:
     import pandas as pd
 
@@ -113,6 +115,7 @@ def llm_enrich(
     in_cols = list(results.columns)
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        worker_setup()
         from engine.kernel.jsonrepair import parse_json_loose
 
         client = factory()

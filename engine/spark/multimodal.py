@@ -27,6 +27,8 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import functions as F
 
+from engine.spark.stage import worker_setup
+
 if TYPE_CHECKING:
     import pandas as pd
     from pyspark.sql import DataFrame, SparkSession
@@ -45,6 +47,7 @@ def make_media_table(spark: "SparkSession", n: int = 64) -> "DataFrame":
     """Deterministic binary media table (seeded bytes, no codecs)."""
 
     def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        worker_setup()
         import hashlib
 
         import pandas as pd
@@ -147,6 +150,7 @@ def extract_media_features(df: "DataFrame", decode_stub: bool = True) -> "DataFr
     """
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        worker_setup()
         import pandas as pd
 
         decode = _decode_fake if decode_stub else _decode_real
@@ -200,6 +204,7 @@ def resize_images(
       NotImplementedError from _decode_real."""
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        worker_setup()
         import pandas as pd
 
         for pdf in batches:
@@ -318,6 +323,7 @@ def image_hashes(df: "DataFrame") -> "DataFrame":
     from collections.abc import Iterator as _It
 
     def run(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
+        worker_setup()
         import pandas as pd
 
         for pdf in batches:

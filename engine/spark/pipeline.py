@@ -172,7 +172,11 @@ def run_extraction(
     row groups around one conversation) or when the job needs the
     deterministic part_id layout for checkpoint lineage
     (engine/spark/job.py always salts). part_id is still computed for
-    downstream rollups either way."""
+    downstream rollups either way.
+
+    The salted layout is 1:1: part_id is in [0, num_partitions), and
+    repartitionById sends part_id p to partition p, so each task
+    extracts exactly one part_id."""
     if num_partitions is None:
         # 4x task slots: pandas-UDF task durations vary with document
         # mix, so finer tasks keep all workers busy (measured: 2x left
@@ -199,8 +203,8 @@ def run_extraction(
             repartition = True
     if repartition:
         salted = df.withColumn("part_id", part_expr(num_partitions, skew_block))
-        # repartition on the salt so one task never owns a whole mega-thread
-        salted = salted.repartition(num_partitions, "part_id")
+        # part_id p goes to partition p: one part_id per task
+        salted = salted.repartitionById(num_partitions, "part_id")
         extracted = extract_turns(salted.drop("part_id"), span_content=span_content)
     else:
         extracted = extract_turns(df, span_content=span_content)

@@ -10,10 +10,15 @@ The UDF is vectorized at batch granularity (no row-at-a-time Python
 UDF registration; regex tables compile once per worker at module
 import). Per-row wall time is accumulated into proc_us so the metrics
 roll-up (engine.spark.job) can report per-partition throughput.
+
+Per-task worker cost: every mapInPandas function in the engine calls
+``worker_setup()`` first (why, and what it saves: BENCH/BASELINE.md
+§4b).
 """
 
 from __future__ import annotations
 
+import sys
 import time
 from collections.abc import Iterator
 from typing import TYPE_CHECKING
@@ -27,8 +32,27 @@ if TYPE_CHECKING:
 _KEY_COLS = ("conv_id", "turn_idx", "role", "tool", "ts")
 
 
+def worker_setup() -> None:
+    """Drop the zipimporters from ``sys.path_importer_cache`` so Spark's
+    per-task ``importlib.invalidate_caches()`` stops re-reading each
+    zip's directory (workers import pyspark from ``pyspark.zip``). The
+    trim is process-wide, so every later task on this worker, of any
+    hop, skips the re-reads.
+
+    The cache is only a cache: an evicted importer is rebuilt on demand
+    from ``zipimport``'s directory cache, without re-reading the zip.
+    That assumes no zip on the path is rewritten in place under a live
+    worker; Spark ships added py-files under new names."""
+    import zipimport
+
+    cache = sys.path_importer_cache
+    for path in [p for p, f in cache.items() if isinstance(f, zipimport.zipimporter)]:
+        del cache[path]
+
+
 def _make_extract_batches(span_content: bool):
     def _extract_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        worker_setup()
         import pandas as pd
 
         # kernel import inside the worker: compiled regex tables are cached

@@ -22,6 +22,7 @@ from typing import TYPE_CHECKING
 from pyspark.sql import functions as F
 
 from engine.spark.schemas import TRANSCRIPT_SCHEMA
+from engine.spark.stage import worker_setup
 
 if TYPE_CHECKING:
     import pandas as pd
@@ -44,6 +45,7 @@ def synthesize_transcripts(
     parallelism = parallelism or spark.sparkContext.defaultParallelism
 
     def expand(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        worker_setup()
         import pandas as pd
 
         from engine.kernel.gen import make_turn, turns_for_conv

@@ -4,6 +4,7 @@ partitioning sanity, native==kernel expression parity, checkpoint
 resume, and parallelism-invariance of the synthesizer."""
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -569,3 +570,104 @@ def test_metrics_count_each_partition_once(spark, transcripts, results, tmp_path
         "bytes_parsed": truth[1],
         "empty_extractions": truth[2],
     }
+
+
+@pytest.mark.parametrize("n", [8, 16])
+def test_salted_layout_one_part_id_per_task(spark, transcripts, monkeypatch, n):
+    """After run_extraction's salted repartition, part_id p sits in
+    Spark partition p: one part_id per task, and no task is empty when
+    every part_id occurs (hashing part_id again left ~40% empty)."""
+    from engine.spark import pipeline
+
+    seen = []
+    real = pipeline.extract_turns
+
+    def spy(df, **kw):
+        seen.append(df)
+        return real(df, **kw)
+
+    monkeypatch.setattr(pipeline, "extract_turns", spy)
+    pipeline.run_extraction(transcripts, num_partitions=n, skew_block=1)
+    (salted,) = seen
+    assert salted.rdd.getNumPartitions() == n
+    rows = salted.select(
+        part_expr(n, skew_block=1).alias("part_id"),
+        F.spark_partition_id().alias("pid"),
+    ).collect()
+    assert {r.part_id for r in rows} == set(range(n))  # every part_id occurs
+    assert all(r.pid == r.part_id for r in rows)
+    per_task = salted.groupBy(F.spark_partition_id().alias("pid")).count().collect()
+    assert sorted(r.pid for r in per_task) == list(range(n))
+
+
+def _with_malformed(spark, transcripts):
+    """transcripts plus four malformed rows: two null texts on real
+    conv_ids, a null conv_id and a null turn_idx. Returns (df, 4)."""
+    from pyspark.sql import types as T
+
+    from engine.spark.schemas import TRANSCRIPT_SCHEMA
+
+    loose = T.StructType([T.StructField(f.name, f.dataType, True) for f in TRANSCRIPT_SCHEMA.fields])
+    base = transcripts.orderBy("conv_id", "turn_idx").limit(3).collect()
+    bad = [
+        (base[0].conv_id, 10_000, "user", None, None, base[0].ts),
+        (base[1].conv_id, 10_001, "user", None, None, base[1].ts),
+        (None, 3, "user", "orphan", None, base[2].ts),
+        (base[2].conv_id, None, "user", "no index", None, base[2].ts),
+    ]
+    return transcripts.union(spark.createDataFrame(bad, loose)), len(bad)
+
+
+def _errors(spark, out):
+    return sorted(
+        (tuple(r) for r in spark.read.parquet(f"{out}/errors")
+         .select("conv_id", "turn_idx", "error").collect()),
+        key=repr,
+    )
+
+
+def _part_files(path):
+    return {n for n in os.listdir(path) if n.startswith("part-")}
+
+
+def test_resume_keeps_errors_table(spark, transcripts, tmp_path_factory):
+    """A resume leg does not rewrite the errors table: after a crash and
+    resume it keeps the first leg's files and every malformed row,
+    once, and equals a one-shot run's."""
+    from engine.spark.job import run_checkpointed
+
+    raw, n_bad = _with_malformed(spark, transcripts)
+    ref = str(tmp_path_factory.mktemp("errors_ref"))
+    run_checkpointed(spark, raw, ref, num_partitions=8)
+    out = str(tmp_path_factory.mktemp("errors_resume"))
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_checkpointed(spark, raw, out, num_partitions=8, fail_after_batches=1)
+    first = _part_files(f"{out}/errors")
+    run_checkpointed(spark, raw, out, num_partitions=8)
+    assert _part_files(f"{out}/errors") == first
+    got = _errors(spark, out)
+    assert len(got) == len(set(got)) == n_bad
+    assert got == _errors(spark, ref)
+    assert _by_key(spark.read.parquet(f"{out}/results")) == _by_key(
+        spark.read.parquet(f"{ref}/results")
+    )
+
+
+def test_crash_before_first_slice_rewrites_errors(spark, transcripts, tmp_path_factory):
+    """A leg that dies before its first checkpoint leaves no checkpoint,
+    so the next launch writes the errors table again; it equals a
+    one-shot run's."""
+    from engine.spark.job import _completed_parts, run_checkpointed
+
+    raw, n_bad = _with_malformed(spark, transcripts)
+    ref = str(tmp_path_factory.mktemp("errors_ref0"))
+    run_checkpointed(spark, raw, ref, num_partitions=8)
+    out = str(tmp_path_factory.mktemp("errors_crash0"))
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_checkpointed(spark, raw, out, num_partitions=8, fail_after_batches=0)
+    assert _completed_parts(f"{out}/checkpoints", "run-1") == set()
+    first = _part_files(f"{out}/errors")
+    run_checkpointed(spark, raw, out, num_partitions=8)
+    assert first and not first & _part_files(f"{out}/errors")
+    got = _errors(spark, out)
+    assert len(got) == n_bad and got == _errors(spark, ref)
