@@ -1136,8 +1136,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_ngram_jaccard": A.dedup_ngram_jaccard,
         # pairs -> connected components -> keep/drop decision -> applied
         "dedup_cluster_assign": A.dedup_cluster_assign,
-        # O(log n) star algorithm over the same pairs -> same oracle
-        "dedup_cluster_assign_star": A.dedup_cluster_assign_star,
         "dedup_apply": A.dedup_apply,
         # quality-aware survivor selection: cluster keeper = longest
         # member (ties -> min id), not min id — the canonical-
@@ -1402,8 +1400,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "skill_match_tiers", "text_preview", "candidate_rank",
         "dedup_exact", "dedup_minhash_lsh", "dedup_simhash",
         "dedup_ngram_jaccard", "dedup_lsh_verified", "dedup_apply",
-        "dedup_cluster_assign", "dedup_cluster_assign_star",
-        "dedup_incremental", "order_rollup",
+        "dedup_cluster_assign", "dedup_incremental", "order_rollup",
         "stratified_sample", "decontaminate", "repetition_metrics",
         "pii_scrub", "vocab_top_k", "corpus_stats", "c4_clean",
         "line_dedup", "internal_ngram_overlap", "lm_unigram_score",
@@ -4006,23 +4003,6 @@ def oracle_sql() -> dict[str, str]:
         # connected components over the jaccard pairs: recursive-CTE
         # transitive closure labels each node with the min reachable id
         "dedup_cluster_assign": """
-            WITH RECURSIVE j AS (__PAIRS__),
-            edges AS (
-                SELECT doc_a AS a, doc_b AS b FROM j
-                UNION SELECT doc_b, doc_a FROM j),
-            nodes AS (SELECT DISTINCT a AS node FROM edges),
-            reach(node, r) AS (
-                SELECT node, node FROM nodes
-                UNION
-                SELECT e.a, reach.r FROM edges e JOIN reach ON e.b = reach.node
-            )
-            SELECT node AS doc_id, min(r) AS cluster_id,
-                   (node = min(r)) AS is_keeper
-            FROM reach GROUP BY node
-        """.replace("__PAIRS__", _NGRAM_JACCARD_SQL),
-        # the star algorithm must produce identical components — same
-        # closure twin, full oracle row for the O(log n) variant
-        "dedup_cluster_assign_star": """
             WITH RECURSIVE j AS (__PAIRS__),
             edges AS (
                 SELECT doc_a AS a, doc_b AS b FROM j

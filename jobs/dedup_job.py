@@ -12,8 +12,9 @@ Usage (local sandbox):
         [--shards 16] [--eval-input /path/eval] [--seed epoch0]
 
 Modes:
-- keep-list: dedup_apply_lsh — exact + LSH-verified near-dup dedup;
-  writes the surviving doc ids.
+- keep-list: dedup_apply_lsh — exact + LSH-verified near-dup dedup,
+  near-dup pairs grouped by dedup_clusters (min-label connected
+  components with pointer jumping); writes the surviving doc ids.
 - prepare: corpus_prepare — quality filter + dedup + fixed-token
   concat packing; writes the loader-ready (doc_id, shard, est_tokens,
   start_tok, bin) table.
@@ -51,7 +52,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--min-words", type=int, default=30)
     ap.add_argument("--seq-len", type=int, default=4096)
     ap.add_argument("--shards", type=int, default=16)
-    ap.add_argument("--clusterer", choices=("label", "star"), default="label")
     ap.add_argument("--eval-input", default=None,
                     help="decontaminate mode: dir with the held-out "
                          "eval documents.parquet")
@@ -70,10 +70,7 @@ def main(argv: list[str] | None = None) -> int:
 
     n_in = A._docs(spark, args.input).count()
     if args.mode == "keep-list":
-        out = A.dedup_apply_lsh(
-            spark, args.input, min_jaccard=args.min_jaccard,
-            clusterer=args.clusterer,
-        )
+        out = A.dedup_apply_lsh(spark, args.input, min_jaccard=args.min_jaccard)
         table = "keep_list"
     elif args.mode == "decontaminate":
         # both arms vs a real eval dir: a doc survives only if neither

@@ -327,15 +327,120 @@ def test_dedup_clusters_chain_merge(spark):
 def test_dedup_clusters_deep_chain_converges(spark):
     from engine.spark.analytics import dedup_clusters
 
-    # a 30-node path graph: diameter 29 > default iterations would fail
-    # a naive 1-round approach; label propagation needs ~diameter
-    # rounds, so give it enough
+    # a 51-node path graph (diameter 50): plain min-label propagation
+    # would need 51 rounds; pointer jumping converges well inside the
+    # default max_iterations
     pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(30)], "doc_a long, doc_b long"
+        [(i, i + 1) for i in range(50)], "doc_a long, doc_b long"
     )
-    got = dedup_clusters(pairs, max_iterations=40).collect()
+    got = dedup_clusters(pairs).collect()
+    assert len(got) == 51
     assert {r.cluster_id for r in got} == {0}
     assert sum(r.is_keeper for r in got) == 1
+
+
+def test_dedup_clusters_raises_when_not_converged(spark):
+    """Partial labels are never returned: a 50-deep chain cannot
+    converge in one round, so the call raises."""
+    from engine.spark.analytics import dedup_clusters
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(50)], "doc_a long, doc_b long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup_clusters(pairs, max_iterations=1)
+
+
+def _union_find_components(edges):
+    """Reference components: {(node, min id in component, is_min)}."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {(v, find(v), v == find(v)) for v in list(parent)}
+
+
+def test_dedup_clusters_matches_union_find(spark):
+    """Components == a pure-Python union-find on a 50-deep path, a
+    merged-chain graph, a self-pair next to a plain pair, and seeded
+    random graphs (self-pairs included). The graphs are laid out on
+    disjoint id ranges and clustered in one call; every id that
+    appears in a pair appears once in the output."""
+    from engine.spark.analytics import dedup_clusters
+
+    graphs = [
+        [(i, i + 1) for i in range(50)],
+        [(1, 2), (2, 3), (10, 11), (3, 10), (20, 21)],
+        [(5, 5), (6, 7)],
+    ]
+    rng = random.Random(5)
+    nodes = list(range(60))
+    edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(40)]
+    graphs.append([(a, b) for a, b in edges if a != b])
+    for seed in range(6):
+        rng = random.Random(seed)
+        graphs.append(
+            [(rng.randrange(200), rng.randrange(200)) for _ in range(150)]
+        )
+    edges = [
+        (g * 1000 + a, g * 1000 + b)
+        for g, graph in enumerate(graphs)
+        for a, b in graph
+    ]
+    df = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    rows = dedup_clusters(df).collect()
+    got = {(r.doc_id, r.cluster_id, r.is_keeper) for r in rows}
+    assert len(rows) == len(got)
+    want = _union_find_components(edges)
+    assert got == want, (sorted(got - want)[:5], sorted(want - got)[:5])
+    # the self-pair contract: id 5 (only pair (5, 5)) is its own keeper
+    assert {t for t in got if 2000 <= t[0] < 3000} == {
+        (2005, 2005, True), (2006, 2006, True), (2007, 2006, False)
+    }
+    # string ids (conversation ids) cluster the same way
+    conv = [("c-07", "c-03"), ("c-03", "c-11"), ("c-20", "c-21"), ("c-30", "c-30")]
+    df = spark.createDataFrame(conv, "doc_a string, doc_b string")
+    got = {(r.doc_id, r.cluster_id, r.is_keeper)
+           for r in dedup_clusters(df).collect()}
+    assert got == _union_find_components(conv)
+
+
+def test_dedup_clusters_job_count(spark):
+    """Spark jobs per call (result collect included) stay below the
+    better of the two connected-components paths this operator
+    replaced: 53 jobs on a 41-node graph (17 two-node pairs + a 7-node
+    chain) and 94 on a 50-deep chain."""
+    from engine.spark.analytics import dedup_clusters
+
+    sc = spark.sparkContext
+    graphs = {
+        "g41": (
+            [(100 + 2 * i, 101 + 2 * i) for i in range(17)]
+            + [(i, i + 1) for i in range(6)],
+            53,
+        ),
+        "chain50": ([(i, i + 1) for i in range(50)], 94),
+    }
+    for name, (edges, bound) in graphs.items():
+        df = spark.createDataFrame(edges, "doc_a long, doc_b long")
+        group = f"dedup_clusters_job_count_{name}"
+        sc.setJobGroup(group, group)
+        try:
+            n_rows = len(dedup_clusters(df).collect())
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert n_rows == (41 if name == "g41" else 51)
+        assert 0 < jobs < bound, (name, jobs)
 
 
 def test_pack_sequences_invariants(spark):
@@ -469,52 +574,6 @@ def test_persisted_codebook_reproduces_inline_training(spark, tmp_path):
         tuple(r) for r in simsearch_ivf_centroids(spark, sf).collect()
     )
     assert served == inline and served
-
-
-def test_star_clusters_match_min_label(spark):
-    """Alternating large/small-star components == min-label propagation
-    on a 50-deep path (diameter stress: star needs O(log n) rounds,
-    label needs 50), a merged-chain graph, and seeded random graphs."""
-    from engine.spark.analytics import dedup_clusters, dedup_clusters_star
-
-    def both(edges, label_iters=80):
-        df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-        a = {
-            (r.doc_id, r.cluster_id, r.is_keeper)
-            for r in dedup_clusters(df, max_iterations=label_iters).collect()
-        }
-        b = {
-            (r.doc_id, r.cluster_id, r.is_keeper)
-            for r in dedup_clusters_star(df).collect()
-        }
-        assert a == b, (sorted(a - b)[:5], sorted(b - a)[:5])
-        return a
-
-    # 12-deep path: star converges in ~4 alternating rounds vs 12
-    # label rounds (the 30-deep min-label case is covered separately by
-    # test_dedup_clusters_deep_chain_converges)
-    got = both([(i, i + 1) for i in range(12)], label_iters=20)
-    assert {c for _, c, _ in got} == {0}
-
-    both([(1, 2), (2, 3), (10, 11), (3, 10), (20, 21)])  # chain merge
-
-    import random
-
-    rng = random.Random(5)
-    nodes = list(range(60))
-    edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(40)]
-    both([(a, b) for a, b in edges if a != b])
-
-
-def test_dedup_apply_lsh_star_matches_label(spark, boilerplate_dir):
-    from engine.spark.analytics import dedup_apply_lsh
-
-    a = sorted(r.doc_id for r in dedup_apply_lsh(spark, boilerplate_dir).collect())
-    b = sorted(
-        r.doc_id
-        for r in dedup_apply_lsh(spark, boilerplate_dir, clusterer="star").collect()
-    )
-    assert a == b
 
 
 def test_corpus_prepare_filters_dedups_and_packs(spark, boilerplate_dir):
