@@ -740,10 +740,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def doc_token_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         # T7 as a pure native expression over raw documents (oracle-able)
+        from engine.spark.pipeline import _t7_tokens
+
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         return docs.select(
             "doc_id",
-            F.greatest(F.lit(1), F.floor(F.length("text") / 4)).cast("long").alias("est_tokens"),
+            _t7_tokens("text").cast("long").alias("est_tokens"),
             F.length("text").cast("long").alias("n_chars_calc"),
         )
 
@@ -1636,7 +1638,7 @@ def _skill_match_oracle() -> str:
 
 def _shingle_ctes(src: str = "documents", where: str = "") -> str:
     """Shared DuckDB CTE chain: distinct word-3-gram shingles per doc
-    (identical tokenization to engine.spark.analytics._shingles)."""
+    (identical tokenization to engine.spark.analytics._ngrams)."""
     return rf"""
         words AS (
             SELECT doc_id,
@@ -1804,7 +1806,7 @@ def _lsh_verified_oracle() -> str:
 def _apply_lsh_drop_ctes(src: str = "documents") -> str:
     """Recursive-CTE transitive closure over the LSH-verified pairs +
     the exact-group drops — the shared tail of dedup_apply_lsh and
-    corpus_prepare (DuckDB twin of analytics._apply_drops_docs).
+    corpus_prepare (DuckDB twin of analytics._keep_list).
     Yields a ``survivors`` CTE of surviving doc ids."""
     return f"""
         {_lsh_verified_ctes(0.5, src)},
@@ -3949,7 +3951,7 @@ def oracle_sql() -> dict[str, str]:
         "token_budget_select": r"""
             WITH w AS (
                 SELECT doc_id,
-                       CAST(floor(length(text) / 4) + 1 AS BIGINT)
+                       greatest(1, CAST(floor(length(text) / 4) AS BIGINT))
                            AS est_tokens,
                        CAST(len(list_distinct(string_split(
                            regexp_replace(lower(text), '\s+', ' ', 'g'),
@@ -4555,10 +4557,10 @@ def oracle_sql() -> dict[str, str]:
         "context_fit": f"""
             WITH cum AS (
                 SELECT conv_id,
-                       CAST(floor(length(coalesce(text, '')) / 4) + 1
-                            AS BIGINT) AS est,
-                       CAST(sum(CAST(floor(length(coalesce(text, '')) / 4)
-                                     + 1 AS BIGINT)) OVER (
+                       greatest(1, CAST(floor(length(coalesce(text, '')) / 4)
+                                        AS BIGINT)) AS est,
+                       CAST(sum(greatest(1, CAST(floor(
+                           length(coalesce(text, '')) / 4) AS BIGINT))) OVER (
                            PARTITION BY conv_id ORDER BY turn_idx, ts
                            ROWS BETWEEN UNBOUNDED PRECEDING
                                AND CURRENT ROW) AS BIGINT) AS cum

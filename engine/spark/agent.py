@@ -524,8 +524,8 @@ def assistant_echo(
     exchange carries per-turn gram arrays (bounded by turn length,
     same order of bytes as the text itself), the lag window pairs each
     turn with its predecessor on that exchange, and the overlap is an
-    in-row array_intersect. Tokenization matches analytics._ngrams
-    (lower + whitespace-normalize + split). Turns shorter than ``n``
+    in-row array_intersect. Tokens and grams are analytics._words /
+    _word_ngrams, the corpus tokenizer. Turns shorter than ``n``
     words carry no grams: as responses they are unmeasurable and emit
     no pair; as prompts they contribute an empty array (echo 0).
 
@@ -536,24 +536,11 @@ def assistant_echo(
     Output per conversation (rows only where ≥1 measurable pair
     exists): n_pairs, n_grams, n_echoed, echo_rate (micro-average
     sum(echoed)/sum(grams)), max_echo, n_high_echo, has_echo."""
-    w = F.split(
-        F.regexp_replace(
-            F.lower(F.coalesce(F.col("text"), F.lit(""))), r"\s+", " "
-        ),
-        " ",
-    )
+    from engine.spark.analytics import _word_ngrams, _words
+
+    w = _words(F.coalesce(F.col("text"), F.lit("")))
     base = turns.select("conv_id", "turn_idx", "ts", "role", w.alias("w"))
-    grams = F.when(
-        F.size("w") >= n,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size("w") - n),
-                lambda i: F.concat_ws(
-                    " ", *[F.element_at("w", i + j + 1) for j in range(n)]
-                ),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = F.array_distinct(_word_ngrams(F.col("w"), n))
     g = base.select("conv_id", "turn_idx", "ts", "role", grams.alias("grams"))
     paired = g.select(
         "conv_id",
@@ -587,8 +574,9 @@ def context_fit(turns: "DataFrame", limit: int = 512) -> "DataFrame":
     """Context-window fit: how much of each conversation's stable-order
     prefix fits a ``limit``-token context — the planning signal for
     truncation/packing policy (what fraction of trajectories train
-    whole, where the cut lands when they don't). Token estimate is the
-    corpus convention: floor(len(text)/4) + 1 per turn.
+    whole, where the cut lands when they don't). Token estimate is T7,
+    max(1, floor(len(text)/4)) per turn — the kernel chunker's rule,
+    which sft_examples and the transcript packers also cut with.
 
     One conv-keyed running-sum window + one conv-keyed aggregate;
     text never leaves the first projection (only its length does).
@@ -596,9 +584,9 @@ def context_fit(turns: "DataFrame", limit: int = 512) -> "DataFrame":
     Output per conversation: n_turns, total_tokens, n_turns_fit
     (longest prefix whose running sum stays ≤ limit), tokens_fit
     (that prefix's token count), fits (whole conversation fits)."""
-    est = (
-        F.floor(F.length(F.coalesce(F.col("text"), F.lit(""))) / 4) + 1
-    ).cast("long")
+    from engine.spark.pipeline import _t7_tokens
+
+    est = _t7_tokens(F.coalesce(F.col("text"), F.lit(""))).cast("long")
     w = _w_conv().rowsBetween(Window.unboundedPreceding, 0)
     cum = turns.select(
         "conv_id", "turn_idx", "ts", est.alias("est")

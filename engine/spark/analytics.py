@@ -12,7 +12,9 @@ Design notes (100 TB path):
   ever materialize within a bucket, never the cross product.
 - Near-dup bucket self-joins (MinHash bands, SimHash blocks, embedding
   sign buckets, multimodal ahash bands) go through _bucketed_pairs and
-  its hub-star skew guard; rp_pair_sims is the one unguarded join left.
+  its hub-star skew guard. rp_pair_sims stays all-pairs on purpose: its
+  output is the pair list, and a star guard there measured dropping 44
+  of 199 verified pairs at sf0.01 and 12,715 of 18,968 at sf0.1.
 - Brute-force ANN broadcasts the (small) query side so the big side
   never shuffles; the IVF variant prunes by centroid-cell equality join.
 """
@@ -23,6 +25,8 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import Observation, Window
 from pyspark.sql import functions as F
+
+from engine.spark.pipeline import _t7_tokens
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame, SparkSession
@@ -74,37 +78,44 @@ def dedup_exact(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     )
 
 
-def _shingles(docs: "DataFrame", distinct: bool = True) -> "DataFrame":
-    """Word 3-gram shingles per doc (native: split + sequence +
-    transform). ``distinct=False`` skips the dedup shuffle — the
-    exploded shingle table is the LARGEST intermediate in the whole
-    dedup pipeline, so consumers whose aggregate is duplicate-
-    insensitive (MinHash: min over hashes) must not pay a full-table
-    shuffle to deduplicate it (measured output-identical, and the
-    shuffle it removes is the one that dominates at corpus scale).
-    Set-semantics consumers (jaccard counts, simhash bit-votes) keep
-    the default."""
-    toks = docs.select(
-        "doc_id",
-        F.split(F.regexp_replace(F.lower("text"), r"\s+", " "), " ").alias("w"),
-    ).filter(F.size("w") >= NGRAM_N)
-    out = toks.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("w") - NGRAM_N),
-                lambda i: F.concat_ws(
-                    " ", F.element_at("w", i + 1), F.element_at("w", i + 2),
-                    F.element_at("w", i + 3)
-                ),
-            )
-        ).alias("shingle"),
+def _words(text) -> "F.Column":
+    """The corpus word tokenizer: lower-case, collapse every whitespace
+    run to one space, split on the space. Every word-level operator
+    (shingles, n-grams, word counts, vocabularies) and its DuckDB twin
+    tokenize this way."""
+    return F.split(F.regexp_replace(F.lower(text), r"\s+", " "), " ")
+
+
+def _word_ngrams(words, n: int) -> "F.Column":
+    """Word ``n``-grams of a token-array column, space-joined, in text
+    order; an array shorter than ``n`` words yields an empty array.
+    Pass a column reference, not an inline expression: ``words`` is
+    read n + 2 times."""
+    return F.when(
+        F.size(words) >= n,
+        F.transform(
+            F.sequence(F.lit(0), F.size(words) - n),
+            lambda i: F.concat_ws(
+                " ", *[F.element_at(words, i + j + 1) for j in range(n)]
+            ),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
+def _ngrams(docs: "DataFrame", n: int) -> "DataFrame":
+    """(doc_id, gram): one row per word n-gram occurrence; docs shorter
+    than n words emit none. Not deduplicated: the exploded table is
+    the largest intermediate of the dedup chain, so consumers whose
+    aggregate ignores duplicates (MinHash: a min over hashes) skip
+    that shuffle, and set-semantics consumers (Jaccard counts, SimHash
+    bit votes) add ``.distinct()``."""
+    return docs.select("doc_id", _words("text").alias("w")).select(
+        "doc_id", F.explode(_word_ngrams(F.col("w"), n)).alias("gram")
     )
-    return out.distinct() if distinct else out
 
 
 def _bucketed_pairs(
-    b: "DataFrame", payload: str, max_bucket_docs: int
+    b: "DataFrame", payload: str, max_bucket_docs: int = LSH_MAX_BUCKET_DOCS
 ) -> "DataFrame":
     """Self-join within ``bucket`` with an oversized-bucket guard — the
     LSH/SimHash skew defense. Boilerplate-heavy corpora put thousands of
@@ -162,8 +173,8 @@ def _minhash_bands(docs: "DataFrame") -> "DataFrame":
     skipping the distinct removes the dedup pipeline's biggest shuffle
     (the exploded shingle table); map-side partial min-agg absorbs the
     duplicates instead."""
-    sh = _shingles(docs, distinct=False)
-    a, b = _phash32_pair(F.col("shingle"))
+    sh = _ngrams(docs, NGRAM_N)
+    a, b = _phash32_pair(F.col("gram"))
     hashed = sh.select("doc_id", a.alias("ha"), (b * 2 + 1).alias("hb"))
     sig = hashed.groupBy("doc_id").agg(
         F.array(
@@ -197,18 +208,15 @@ def _minhash_bands(docs: "DataFrame") -> "DataFrame":
 
 
 def dedup_minhash_lsh(
-    spark: "SparkSession",
-    sf_dir: str,
-    jaccard_threshold: float = 0.5,
-    max_bucket_docs: int = LSH_MAX_BUCKET_DOCS,
+    spark: "SparkSession", sf_dir: str, jaccard_threshold: float = 0.5
 ) -> "DataFrame":
     """MinHash(32) + LSH(8 bands x 4) candidate pairs, LSH-bucket join
     only (no cross product), verified by estimated signature agreement.
     Oversized band buckets (boilerplate skew) emit hub-star pairs
     instead of all-pairs (_bucketed_pairs). Fully DuckDB-oracled via
     the portable md5 double-hash (_minhash_bands)."""
-    return _minhash_est_pairs(
-        _docs(spark, sf_dir), jaccard_threshold, max_bucket_docs
+    return _est_pairs_from_bands(
+        _minhash_bands(_docs(spark, sf_dir)), jaccard_threshold
     )
 
 
@@ -222,18 +230,13 @@ def _est_jaccard(pa, pb) -> "F.Column":
     )
 
 
-def _minhash_est_pairs(
-    docs: "DataFrame", jaccard_threshold: float, max_bucket_docs: int
-) -> "DataFrame":
-    return _est_pairs_from_bands(
-        _minhash_bands(docs), jaccard_threshold, max_bucket_docs
-    )
-
-
 def _est_pairs_from_bands(
-    bands: "DataFrame", jaccard_threshold: float, max_bucket_docs: int
+    bands: "DataFrame", jaccard_threshold: float
 ) -> "DataFrame":
-    pairs = _bucketed_pairs(bands, "sig", max_bucket_docs)
+    """(doc_a, doc_b, est_jaccard) for band-colliding pairs of a
+    _minhash_bands table whose signature estimate clears the
+    threshold (0.0 keeps every candidate)."""
+    pairs = _bucketed_pairs(bands, "sig")
     est = (
         pairs.select(
             "doc_a", "doc_b", _est_jaccard("pa", "pb").alias("est_jaccard")
@@ -251,7 +254,7 @@ def adaptive_simhash_band_bits(n_docs: int, lo: int = 10, hi: int = 20) -> int:
     clamped to [10, 20]. Wider bands at scale mean fewer bands
     (floor(60/bits)) and a weaker pigeonhole guarantee — the classic
     SimHash trade (Manku et al., WWW'07 run 8B docs with comparable
-    block sizes at hamming ≤ 3); the max_bucket_docs hub-star guard
+    block sizes at hamming ≤ 3); the _bucketed_pairs hub-star guard
     bounds whatever skew remains."""
     import math
 
@@ -259,20 +262,60 @@ def adaptive_simhash_band_bits(n_docs: int, lo: int = 10, hi: int = 20) -> int:
     return min(max(want, lo), hi)
 
 
+def _hamming_pairs(
+    hashes: "DataFrame", h: str, band_bits: int, n_bands: int, max_hamming: int
+) -> "DataFrame":
+    """Banded-LSH near-duplicate pairs over a (doc_id, ``h``) table of
+    integer hashes: ``h`` is cut into ``n_bands`` disjoint
+    ``band_bits``-wide blocks (low bits first), a pair is a candidate
+    when ANY block matches exactly (pigeonhole: hamming ≤ n_bands − 1
+    always collides somewhere), and the full popcount(xor) verifies
+    every candidate — zero false positives. Bucket key = band index in
+    the high bits, the band's slice low, so all bands share one
+    explode and one _bucketed_pairs self-join (oversized buckets pair
+    as a hub star). Returns (doc_a, doc_b, hamming), doc_a < doc_b."""
+    mask = (1 << band_bits) - 1
+    banded = hashes.select(
+        "doc_id",
+        h,
+        F.explode(
+            F.array(
+                *[
+                    (
+                        F.lit(b << band_bits)
+                        + F.shiftrightunsigned(h, b * band_bits).bitwiseAND(
+                            F.lit(mask)
+                        )
+                    ).cast("long")
+                    for b in range(n_bands)
+                ]
+            )
+        ).alias("bucket"),
+    )
+    pairs = (
+        _bucketed_pairs(banded, h)
+        # a pair can collide in several bands -> keep one row
+        .dropDuplicates(["doc_a", "doc_b"])
+        .select(
+            "doc_a",
+            "doc_b",
+            F.bit_count(F.col("pa").bitwiseXOR(F.col("pb"))).alias("hamming"),
+        )
+    )
+    return pairs.filter(F.col("hamming") <= max_hamming)
+
+
 def dedup_simhash(
     spark: "SparkSession",
     sf_dir: str,
     max_hamming: int = 6,
     band_bits: int | None = None,
-    max_bucket_docs: int = LSH_MAX_BUCKET_DOCS,
 ) -> "DataFrame":
     """60-bit SimHash near-dup pairs, multi-band bucketed: the hash is
     split into floor(60/band_bits) disjoint bit-blocks and a pair is a
-    candidate when ANY block matches exactly (pigeonhole: hamming ≤
-    bands−1 is guaranteed to collide somewhere; higher distances
-    collide with the s-curve probability), then the FULL hamming
-    distance verifies every candidate — zero false positives.
-    band_bits=None derives the width from the corpus size
+    candidate when ANY block matches exactly (_hamming_pairs; higher
+    distances than the pigeonhole bound collide with the s-curve
+    probability). band_bits=None derives the width from the corpus size
     (adaptive_simhash_band_bits: ≥ 2n keys per band); the oracled
     entry pins band_bits=10 (6 bands, guarantee ≤ 5). Oversized
     buckets emit hub-star pairs (_bucketed_pairs skew guard).
@@ -287,7 +330,7 @@ def dedup_simhash(
     if band_bits is None:
         band_bits = adaptive_simhash_band_bits(docs.count())
     n_bands = max(1, SIMHASH_BITS // band_bits)
-    sh = _shingles(docs).withColumn("h", _phash60(F.col("shingle")))
+    sh = _ngrams(docs, NGRAM_N).distinct().withColumn("h", _phash60(F.col("gram")))
     hs = sh.groupBy("doc_id").agg(F.collect_list("h").alias("hs"))
     simhash = hs.select(
         "doc_id",
@@ -302,37 +345,7 @@ def dedup_simhash(
             0L, (a, x) -> a + x)
         """).alias("simhash"),
     )
-    # bucket key = band index in the high bits, band's hash slice low —
-    # bands live in disjoint keyspaces within one explode/self-join
-    mask = (1 << band_bits) - 1
-    banded = simhash.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    (
-                        F.lit(b << band_bits)
-                        + F.shiftrightunsigned("simhash", b * band_bits).bitwiseAND(
-                            F.lit(mask)
-                        )
-                    ).cast("long")
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bucket"),
-    )
-    pairs = (
-        _bucketed_pairs(banded, "simhash", max_bucket_docs)
-        # a pair can collide in several bands -> keep one row
-        .dropDuplicates(["doc_a", "doc_b"])
-        .select(
-            "doc_a",
-            "doc_b",
-            F.bit_count(F.col("pa").bitwiseXOR(F.col("pb"))).alias("hamming"),
-        )
-    )
-    return pairs.filter(F.col("hamming") <= max_hamming)
+    return _hamming_pairs(simhash, "simhash", band_bits, n_bands, max_hamming)
 
 
 def dedup_ngram_jaccard(
@@ -343,11 +356,11 @@ def dedup_ngram_jaccard(
     covers the testdata's planted near-dup pairs (jaccard ≥ 0.95 at
     sf0.01) so the oracle checks real positives, not an empty set."""
     docs = _docs(spark, sf_dir).filter(F.col("doc_id") < max_doc_id)
-    sh = _shingles(docs)
+    sh = _ngrams(docs, NGRAM_N).distinct()
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        a.join(b, (F.col("a.gram") == F.col("b.gram")) & (F.col("a.doc_id") < F.col("b.doc_id")))
         .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count("*").alias("inter"))
     )
@@ -364,11 +377,7 @@ def dedup_ngram_jaccard(
 
 
 def lsh_verified_pairs(
-    spark: "SparkSession",
-    sf_dir: str,
-    min_jaccard: float = 0.5,
-    est_floor: float = 0.0,
-    max_bucket_docs: int = LSH_MAX_BUCKET_DOCS,
+    spark: "SparkSession", sf_dir: str, min_jaccard: float = 0.5
 ) -> "DataFrame":
     """The production pair source: LSH band-collision candidates
     verified with EXACT n-gram Jaccard computed ONLY on those pairs —
@@ -377,21 +386,15 @@ def lsh_verified_pairs(
     come from joining the candidate pairs back to the shingle sets:
     pair ⋈ shingles(doc_a) on doc_a, then ⋈ shingles on (doc_b,
     shingle) — work is proportional to candidate-pair shingles, not to
-    corpus². ``est_floor`` optionally pre-filters candidates by the
-    signature estimate (0.0 = pure band collision, max recall; raise it
-    at scale to shed verify cost)."""
-    return _lsh_verified_pairs_docs(
-        _docs(spark, sf_dir), min_jaccard, est_floor, max_bucket_docs
-    )
+    corpus². Every band collision is a candidate (no signature-estimate
+    pre-filter: max recall)."""
+    return _lsh_verified_pairs_docs(_docs(spark, sf_dir), min_jaccard)
 
 
 def _lsh_verified_pairs_docs(
-    docs: "DataFrame",
-    min_jaccard: float = 0.5,
-    est_floor: float = 0.0,
-    max_bucket_docs: int = LSH_MAX_BUCKET_DOCS,
+    docs: "DataFrame", min_jaccard: float = 0.5
 ) -> "DataFrame":
-    cands = _minhash_est_pairs(docs, est_floor, max_bucket_docs).select(
+    cands = _est_pairs_from_bands(_minhash_bands(docs), 0.0).select(
         "doc_a", "doc_b"
     )
     return _verify_pairs(cands, docs, min_jaccard)
@@ -404,11 +407,11 @@ def _verify_pairs(
     (the verify tail shared by lsh_verified_pairs and
     dedup_incremental): pair ⋈ shingles(doc_a), then ⋈ shingles on
     (doc_b, shingle) — work ∝ candidate-pair shingles, never corpus²."""
-    sh = _shingles(docs)
+    sh = _ngrams(docs, NGRAM_N).distinct()
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     a_sh = cands.join(sh.withColumnRenamed("doc_id", "doc_a"), "doc_a")
     inter = (
-        a_sh.join(sh.withColumnRenamed("doc_id", "doc_b"), ["doc_b", "shingle"])
+        a_sh.join(sh.withColumnRenamed("doc_id", "doc_b"), ["doc_b", "gram"])
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("inter"))
     )
@@ -518,48 +521,41 @@ def dedup_cluster_assign(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     return dedup_clusters(dedup_ngram_jaccard(spark, sf_dir))
 
 
-def _apply_drops(
-    spark: "SparkSession",
-    sf_dir: str,
-    pairs: "DataFrame",
-) -> "DataFrame":
-    return _apply_drops_docs(_docs(spark, sf_dir), pairs)
-
-
-def _apply_drops_docs(
-    corpus: "DataFrame",
-    pairs: "DataFrame",
-) -> "DataFrame":
-    """Shared tail of the dedup pipeline: the corpus with duplicates
-    DROPPED, given a near-duplicate pair source. Non-keepers come from
-    exact content groups (every id but the group minimum) and from
-    near-dup components (cluster non-keepers over ``pairs``); the
-    corpus anti-joins the union. Emits the surviving doc ids — at
-    scale this is the keep-list write that every downstream training
-    job reads."""
-    docs = corpus.select("doc_id")
-    exact = (
-        corpus
-        .groupBy(F.md5("text").alias("h"))
+def _exact_drops(corpus: "DataFrame") -> "DataFrame":
+    """doc_ids of exact-content duplicates: every id of an md5(text)
+    group but the group minimum."""
+    return (
+        corpus.groupBy(F.md5("text").alias("h"))
         .agg(F.min("doc_id").alias("keep_id"), F.collect_list("doc_id").alias("ids"))
         .select(F.explode("ids").alias("doc_id"), "keep_id")
         .filter(F.col("doc_id") != F.col("keep_id"))
         .select("doc_id")
     )
-    near = (
-        dedup_clusters(pairs)
-        .filter(~F.col("is_keeper"))
-        .select("doc_id")
-    )
-    drop = exact.unionByName(near).distinct()
-    return docs.join(drop, "doc_id", "left_anti")
+
+
+def _near_drops(pairs: "DataFrame") -> "DataFrame":
+    """doc_ids of near-duplicates: every id of a connected component
+    over ``pairs`` (doc_a, doc_b) but the component's keeper."""
+    return dedup_clusters(pairs).filter(~F.col("is_keeper")).select("doc_id")
+
+
+def _keep_list(corpus: "DataFrame", near_drop: "DataFrame") -> "DataFrame":
+    """Shared tail of the dedup pipeline: the surviving doc ids of
+    ``corpus`` once exact-group non-keepers (_exact_drops) and the
+    given near-dup drops are removed — one anti-join against their
+    union, so a doc that is both is dropped once. At scale this is the
+    keep-list write that every downstream training job reads."""
+    drop = _exact_drops(corpus).unionByName(near_drop).distinct()
+    return corpus.select("doc_id").join(drop, "doc_id", "left_anti")
 
 
 def dedup_apply(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     """Surviving corpus after exact + near-dup drops, with the
     SQL-expressible bounded-id jaccard pair source (oracle path; see
     dedup_apply_lsh for the production pair source)."""
-    return _apply_drops(spark, sf_dir, dedup_ngram_jaccard(spark, sf_dir))
+    return _keep_list(
+        _docs(spark, sf_dir), _near_drops(dedup_ngram_jaccard(spark, sf_dir))
+    )
 
 
 def dedup_keep_best(spark: "SparkSession", sf_dir: str) -> "DataFrame":
@@ -617,20 +613,8 @@ def dedup_keep_best(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     near_drop = members.join(
         best.select("doc_id"), "doc_id", "left_anti"
     ).select("doc_id")
-    exact_drop = (
-        docs.groupBy(F.md5("text").alias("h"))
-        .agg(
-            F.min("doc_id").alias("keep_id"),
-            F.collect_list("doc_id").alias("ids"),
-        )
-        .select(F.explode("ids").alias("doc_id"), "keep_id")
-        .filter(F.col("doc_id") != F.col("keep_id"))
-        .select("doc_id")
-    )
-    drop = near_drop.unionByName(exact_drop).distinct()
     return (
-        docs.select("doc_id")
-        .join(drop, "doc_id", "left_anti")
+        _keep_list(docs, near_drop)
         .join(best, "doc_id", "left")
         .select(
             "doc_id",
@@ -670,12 +654,8 @@ def token_budget_select(
     docs = _docs(spark, sf_dir)
     scored = docs.select(
         "doc_id",
-        (F.floor(F.length("text") / 4) + 1).cast("long").alias("est_tokens"),
-        F.size(
-            F.array_distinct(
-                F.split(F.regexp_replace(F.lower("text"), r"\s+", " "), " ")
-            )
-        ).cast("long").alias("score"),
+        _t7_tokens("text").cast("long").alias("est_tokens"),
+        F.size(F.array_distinct(_words("text"))).cast("long").alias("score"),
     )
     hist = sorted(
         scored.groupBy("score").agg(F.sum("est_tokens").alias("grp_est")).collect(),
@@ -727,10 +707,7 @@ def token_budget_select(
 
 
 def dedup_apply_lsh(
-    spark: "SparkSession",
-    sf_dir: str,
-    min_jaccard: float = 0.5,
-    max_bucket_docs: int = LSH_MAX_BUCKET_DOCS,
+    spark: "SparkSession", sf_dir: str, min_jaccard: float = 0.5
 ) -> "DataFrame":
     """THE production dedup composition a 100 TB corpus runs first:
     MinHash+LSH band-collision candidates → exact n-gram Jaccard
@@ -742,10 +719,8 @@ def dedup_apply_lsh(
     (_bucketed_pairs hub-star guard bounds even pathological
     boilerplate buckets). Fully DuckDB-oracled via the portable md5
     hashes."""
-    pairs = lsh_verified_pairs(
-        spark, sf_dir, min_jaccard=min_jaccard, max_bucket_docs=max_bucket_docs
-    )
-    return _apply_drops(spark, sf_dir, pairs)
+    pairs = lsh_verified_pairs(spark, sf_dir, min_jaccard=min_jaccard)
+    return _keep_list(_docs(spark, sf_dir), _near_drops(pairs))
 
 
 # ---------------------------------------------------- incremental dedup
@@ -781,8 +756,6 @@ def dedup_incremental_batch(
     state_exact: "DataFrame",
     state_bands: "DataFrame",
     min_jaccard: float = 0.5,
-    est_threshold: float = 0.5,
-    max_bucket_docs: int = LSH_MAX_BUCKET_DOCS,
 ) -> "DataFrame":
     """Surviving doc ids of a NEW batch deduped against a persisted
     corpus state AND within itself — the operation an ongoing training
@@ -794,7 +767,7 @@ def dedup_incremental_batch(
        shuffle join against the state's hash table).
     2. near-dup vs history: the new docs' MinHash band buckets join
        the state's band table; colliding (new, old) pairs whose
-       signature-estimate Jaccard ≥ ``est_threshold`` drop the new
+       signature-estimate Jaccard ≥ 0.5 drop the new
        doc. Estimate-only by design: the state carries signatures,
        not text, so history-side verification would need the old
        corpus — the standard at-scale trade (the estimator's error at
@@ -831,27 +804,20 @@ def dedup_incremental_batch(
         bands.alias("n")
         .join(state_bands.alias("o"), "bucket")
         .filter(
-            _est_jaccard(F.col("n.sig"), F.col("o.sig")) >= est_threshold
+            _est_jaccard(F.col("n.sig"), F.col("o.sig")) >= 0.5
         )
         .select(F.col("n.doc_id").alias("doc_id"))
         .distinct()
     )
     s2 = s1.join(hits_old, "doc_id", "left_anti").localCheckpoint()
     bands2 = bands.join(s2.select("doc_id"), "doc_id")
-    cands = _est_pairs_from_bands(bands2, 0.0, max_bucket_docs).select(
-        "doc_a", "doc_b"
-    )
-    pairs = _verify_pairs(cands, s2, min_jaccard)
-    near = dedup_clusters(pairs).filter(~F.col("is_keeper")).select("doc_id")
+    cands = _est_pairs_from_bands(bands2, 0.0).select("doc_a", "doc_b")
+    near = _near_drops(_verify_pairs(cands, s2, min_jaccard))
     return s2.select("doc_id").join(near, "doc_id", "left_anti")
 
 
 def dedup_incremental(
-    spark: "SparkSession",
-    sf_dir: str,
-    min_jaccard: float = 0.5,
-    est_threshold: float = 0.5,
-    max_bucket_docs: int = LSH_MAX_BUCKET_DOCS,
+    spark: "SparkSession", sf_dir: str, min_jaccard: float = 0.5
 ) -> "DataFrame":
     """Driver-query form of dedup_incremental_batch: even doc ids play
     the already-ingested corpus (state computed in-plan — identical
@@ -866,32 +832,10 @@ def dedup_incremental(
         old.select(F.md5("text").alias("content_hash")),
         _minhash_bands(old),
         min_jaccard=min_jaccard,
-        est_threshold=est_threshold,
-        max_bucket_docs=max_bucket_docs,
     )
 
 
 # -------------------------------------------------------- decontamination
-
-def _ngrams(docs: "DataFrame", n: int) -> "DataFrame":
-    """Word n-grams per doc, same tokenization as _shingles (lowered,
-    whitespace-normalized); docs shorter than n words emit none."""
-    toks = docs.select(
-        "doc_id",
-        F.split(F.regexp_replace(F.lower("text"), r"\s+", " "), " ").alias("w"),
-    ).filter(F.size("w") >= n)
-    return toks.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("w") - n),
-                lambda i: F.concat_ws(
-                    " ", *[F.element_at("w", i + j + 1) for j in range(n)]
-                ),
-            )
-        ).alias("gram"),
-    )
-
 
 def decontaminate_batch(
     corpus: "DataFrame",
@@ -1313,7 +1257,14 @@ def dedup_embedding_cosine(
     _vecs) are dropped before bucketing: they pair with nothing, and
     dropping them keeps bucket sizes identical to the DuckDB twin's.
     Threshold compares the 5-dp-rounded cosine so the cut is FP-stable
-    across engines."""
+    across engines.
+
+    Recall against brute-force pairs at threshold 0.35 (measured): the
+    pinned sign_dims=6 of the oracled entry finds 0.125 of them at
+    sf0.01 and 0.109 at sf0.1; the adaptive default finds 0.007 at
+    sf0.1. Hyperplane LSH over int8 codes recalled 0.258 / 0.113 but
+    ran 25.8 s vs 1.5 s at sf0.01 and 121.6 s vs 3.4 s at sf0.1, so
+    this operator keeps coordinate signs."""
     embs = _vecs(spark, sf_dir)
     if sign_dims is None:
         n, dim = _corpus_stats(embs)
@@ -1327,7 +1278,7 @@ def dedup_embedding_cosine(
         F.col("vec_id").alias("doc_id"), "v", F.explode(F.array(*keys)).alias("bucket")
     )
     pairs = (
-        _bucketed_pairs(banded, "v", LSH_MAX_BUCKET_DOCS)
+        _bucketed_pairs(banded, "v")
         # a pair can collide in several probes -> keep one row
         .dropDuplicates(["doc_a", "doc_b"])
         .select(
@@ -1367,11 +1318,7 @@ def dedup_apply_embeddings(
     pairs = dedup_embedding_cosine(
         spark, sf_dir, threshold=threshold, sign_dims=sign_dims, probes=probes
     ).select(F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b"))
-    drop = (
-        dedup_clusters(pairs)
-        .filter(~F.col("is_keeper"))
-        .select(F.col("doc_id").alias("vec_id"))
-    )
+    drop = _near_drops(pairs).select(F.col("doc_id").alias("vec_id"))
     return _embs(spark, sf_dir).select("vec_id").join(drop, "vec_id", "left_anti")
 
 
@@ -1400,8 +1347,7 @@ def _pack_docs(
     docs = corpus.select(
         "doc_id",
         (F.col("doc_id") % n_shards).cast("int").alias("shard"),
-        F.greatest(F.lit(1), F.floor(F.length("text") / 4))
-        .cast("long").alias("est_tokens"),
+        _t7_tokens("text").cast("long").alias("est_tokens"),
     )
     w = (
         Window.partitionBy("shard")
@@ -1456,7 +1402,7 @@ def text_quality(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     """Quality scoring: length/punctuation/stopword/digit ratios +
     mean word length — the native analogue of the kernel's P5 gate."""
     docs = _docs(spark, sf_dir)
-    words = F.split(F.regexp_replace(F.lower("text"), r"\s+", " "), " ")
+    words = _words("text")
     stop_hits = sum(_substr_count(F.col("text"), w) for w in _LANG_MARKERS["en"])
     n_chars = F.length("text")
     return docs.select(
@@ -1477,7 +1423,7 @@ def token_count(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     BPE-ish subword proxy (alnum runs + punctuation marks counted
     separately)."""
     docs = _docs(spark, sf_dir)
-    words = F.split(F.regexp_replace(F.lower("text"), r"\s+", " "), " ")
+    words = _words("text")
     # mark each alnum run with \x01 then count marks = number of runs
     marked = F.regexp_replace("text", "[A-Za-z0-9]+", "\x01")
     alnum_runs = F.length(marked) - F.length(F.replace(marked, F.lit("\x01"), F.lit("")))
@@ -1485,7 +1431,7 @@ def token_count(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     return docs.select(
         "doc_id",
         F.size(words).cast("long").alias("ws_tokens"),
-        F.greatest(F.lit(1), F.floor(F.length("text") / 4)).cast("long").alias("est_tokens"),
+        _t7_tokens("text").cast("long").alias("est_tokens"),
         (alnum_runs + punct).cast("long").alias("bpeish_tokens"),
     )
 
@@ -1508,9 +1454,8 @@ def vocab_top_k(
     TakeOrdered over the already-tiny vocab table, deterministic under
     ties via the (count DESC, word ASC) total order."""
     docs = _docs(spark, sf_dir)
-    w = F.split(F.regexp_replace(F.lower("text"), r"\s+", " "), " ")
     return (
-        docs.select(F.explode(w).alias("word"))
+        docs.select(F.explode(_words("text")).alias("word"))
         .groupBy("word")
         .agg(F.count("*").cast("long").alias("n"))
         .filter(F.col("n") >= min_count)
@@ -1554,7 +1499,7 @@ def corpus_stats(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     per-partition state is a count-map over distinct lengths, not the
     rows; for unbounded domains swap in approx_percentile."""
     docs = _docs(spark, sf_dir)
-    nw = F.size(F.split(F.regexp_replace(F.lower("text"), r"\s+", " "), " "))
+    nw = F.size(_words("text"))
     pre = docs.select(
         nw.alias("nw"), F.md5("text").alias("h"), *_lang_score_cols()
     ).select("nw", "h", _lang_pred_from_scores().alias("lang"))
@@ -1631,18 +1576,8 @@ def repetition_metrics(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     # AND again into the gate column — measured 18.9 s at sf0.1 vs
     # ~1 s staged (higher-order folds are interpreted, so duplicated
     # evaluation is not rescued by codegen subexpression elimination).
-    w = F.split(F.regexp_replace(F.lower("text"), r"\s+", " "), " ")
-    s1 = docs.select("doc_id", w.alias("w"))
-    g2 = F.when(
-        F.size("w") >= 2,
-        F.transform(
-            F.sequence(F.lit(0), F.size("w") - 2),
-            lambda i: F.concat(
-                F.element_at("w", i + 1), F.lit(" "), F.element_at("w", i + 2)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    s2 = s1.select("doc_id", "w", g2.alias("g2"))
+    s1 = docs.select("doc_id", _words("text").alias("w"))
+    s2 = s1.select("doc_id", "w", _word_ngrams(F.col("w"), 2).alias("g2"))
     s3 = s2.select(
         "doc_id",
         F.size("w").alias("n_w"),
@@ -1724,8 +1659,7 @@ def lm_unigram_score(
     whole operator one oracle-checkable plan. Deterministic top-k under
     count ties via (n DESC, word ASC)."""
     docs = _docs(spark, sf_dir)
-    w = F.split(F.regexp_replace(F.lower("text"), r"\s+", " "), " ")
-    words = docs.select("doc_id", F.explode(w).alias("word"))
+    words = docs.select("doc_id", F.explode(_words("text")).alias("word"))
     vocab = (
         words.groupBy("word")
         .agg(F.count("*").alias("n"))
@@ -2120,7 +2054,7 @@ def quality_filter_docs(
     ``max_digit_ratio``. Empty/degenerate texts (null ratio via
     try_divide) are dropped. Identical predicates in the DuckDB
     oracle; map-only, no shuffle."""
-    words = F.split(F.regexp_replace(F.lower("text"), r"\s+", " "), " ")
+    words = _words("text")
     dr = F.try_divide(
         F.length(F.regexp_replace("text", r"[^0-9]", "")), F.length("text")
     )
@@ -2160,7 +2094,7 @@ def corpus_prepare(
         _docs(spark, sf_dir), min_words, max_digit_ratio
     ).persist()
     pairs = _lsh_verified_pairs_docs(filtered, min_jaccard=min_jaccard)
-    survivors = _apply_drops_docs(filtered, pairs)
+    survivors = _keep_list(filtered, _near_drops(pairs))
     kept = filtered.join(survivors.select("doc_id"), "doc_id")
     return _pack_docs(kept, seq_len, n_shards)
 
@@ -2251,9 +2185,7 @@ def source_scorecard(
     per_text = d.select(
         "source",
         F.md5("text").alias("h"),
-        F.greatest(F.lit(1), F.floor(F.length("text") / 4))
-        .cast("long")
-        .alias("tok"),
+        _t7_tokens("text").cast("long").alias("tok"),
     )
     g1 = per_text.groupBy("source", "h").agg(
         F.count("*").alias("n"), F.sum("tok").alias("tok")
@@ -2311,7 +2243,7 @@ def lm_bigram_score(
     Documents with fewer than two words have no bigrams and are
     absent by definition (pytest-documented)."""
     docs = _docs(spark, sf_dir)
-    w = F.split(F.regexp_replace(F.lower("text"), r"\s+", " "), " ")
+    w = _words("text")
     toks = docs.select("doc_id", w.alias("w")).filter(F.size("w") >= 2)
     bi = toks.select(
         "doc_id",
@@ -2523,7 +2455,6 @@ def decontaminate_fuzzy_batch(
     corpus: "DataFrame",
     eval_docs: "DataFrame",
     jaccard_threshold: float = 0.5,
-    max_eval_bucket: int = LSH_MAX_BUCKET_DOCS,
     eval_bands: "DataFrame | None" = None,
 ) -> "DataFrame":
     """Paraphrase-robust eval-set DECONTAMINATION — drop every training
@@ -2542,21 +2473,17 @@ def decontaminate_fuzzy_batch(
     shingles with map-side partial min-agg; shingles NOT deduplicated,
     min is duplicate-insensitive) and is never shuffled afterwards.
     Candidate pairs exist only within a shared band bucket, and each is
-    bounded by |eval ∩ bucket| ≤ ``max_eval_bucket`` (oversized eval
+    bounded by |eval ∩ bucket| ≤ LSH_MAX_BUCKET_DOCS (oversized eval
     buckets are degenerate boilerplate; capping them bounds the
     per-corpus-row fanout — connectivity does not matter here because
     any single surviving hit already drops the doc).
 
     ``eval_bands`` short-circuits the eval-side derivation with a
-    pre-built capped band table (``bucket``, ``esig``) from
+    pre-built capped band table (``eval_id``, ``esig``, ``bucket``) from
     :func:`eval_band_table` — the streaming caller builds and caches it
     once for the stream's lifetime instead of re-signing the eval set
     per microbatch."""
-    eb = (
-        eval_bands
-        if eval_bands is not None
-        else eval_band_table(eval_docs, max_eval_bucket)
-    )
+    eb = eval_bands if eval_bands is not None else eval_band_table(eval_docs)
     cb = _minhash_bands(corpus)
     hits = (
         cb.join(F.broadcast(eb), "bucket")
@@ -2570,20 +2497,19 @@ def decontaminate_fuzzy_batch(
     return corpus.select("doc_id").join(hits, "doc_id", "left_anti")
 
 
-def eval_band_table(
-    eval_docs: "DataFrame", max_eval_bucket: int = LSH_MAX_BUCKET_DOCS
-) -> "DataFrame":
-    """The broadcastable eval-side artifact of decontaminate_fuzzy_batch:
-    banded MinHash signatures of the eval set with degenerate
-    (boilerplate) buckets capped. Split out so a fixed eval set is
-    signed ONCE for many corpus batches."""
+def eval_band_table(eval_docs: "DataFrame") -> "DataFrame":
+    """The broadcastable eval-side artifact of decontaminate_fuzzy_batch
+    and contamination_report: banded MinHash signatures of the eval
+    set (eval_id, esig, bucket) with degenerate (boilerplate) buckets
+    of more than LSH_MAX_BUCKET_DOCS eval docs dropped. Split out so a
+    fixed eval set is signed ONCE for many corpus batches."""
     eb = _minhash_bands(eval_docs).select(
-        F.col("bucket"), F.col("sig").alias("esig")
+        F.col("doc_id").alias("eval_id"), F.col("sig").alias("esig"), "bucket"
     )
     w = Window.partitionBy("bucket")
     return (
         eb.withColumn("bsize", F.count("*").over(w))
-        .filter(F.col("bsize") <= max_eval_bucket)
+        .filter(F.col("bsize") <= LSH_MAX_BUCKET_DOCS)
         .drop("bsize")
     )
 
@@ -2623,21 +2549,9 @@ def boilerplate_ngrams_batch(
     partial counts combine map-side, shuffle volume ∝ distinct grams,
     and the min_docs filter + top-k run on the already-aggregated
     table (TakeOrdered — no global sort)."""
-    toks = docs.select(
-        "doc_id",
-        F.split(F.regexp_replace(F.lower("text"), r"\s+", " "), " ").alias("w"),
-    ).filter(F.size("w") >= n)
+    toks = docs.select(_words("text").alias("w"))
     grams = toks.select(
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(0), F.size("w") - n),
-                    lambda i: F.concat_ws(
-                        " ", *[F.element_at("w", i + j + 1) for j in range(n)]
-                    ),
-                )
-            )
-        ).alias("gram")
+        F.explode(F.array_distinct(_word_ngrams(F.col("w"), n))).alias("gram")
     )
     counts = (
         grams.groupBy("gram")
@@ -2710,7 +2624,6 @@ def contamination_report(
     n: int = 13,
     jaccard_threshold: float = 0.5,
     eval_mod: int = 5,
-    max_eval_bucket: int = LSH_MAX_BUCKET_DOCS,
 ) -> "DataFrame":
     """Per-eval-document contamination AUDIT — the table a data team
     reads before shipping an eval suite: for every held-out document
@@ -2744,18 +2657,9 @@ def contamination_report(
         F.count("*").cast("long").alias("n_exact")
     )
 
-    w = Window.partitionBy("bucket")
-    eb = (
-        _minhash_bands(ev)
-        .select(F.col("doc_id").alias("eval_id"), F.col("sig").alias("esig"),
-                "bucket")
-        .withColumn("bsize", F.count("*").over(w))
-        .filter(F.col("bsize") <= max_eval_bucket)
-        .drop("bsize")
-    )
     fz_pairs = (
         _minhash_bands(corpus)
-        .join(F.broadcast(eb), "bucket")
+        .join(F.broadcast(eval_band_table(ev)), "bucket")
         .select(
             "eval_id", "doc_id",
             _est_jaccard(F.col("sig"), F.col("esig")).alias("est"),
@@ -2800,11 +2704,7 @@ def source_keywords_batch(
     so the top-k is deterministic."""
     words = docs.select(
         "source",
-        F.explode(
-            F.array_distinct(
-                F.split(F.regexp_replace(F.lower("text"), r"\s+", " "), " ")
-            )
-        ).alias("word"),
+        F.explode(F.array_distinct(_words("text"))).alias("word"),
     ).filter(F.col("word") != "")
     # sw feeds BOTH the scored join and the corpus-df aggregate; without
     # materialization Spark re-executes the corpus scan + explode once
@@ -2860,7 +2760,8 @@ def dedup_report(
 
     Composition of the existing chain (exact hash agg; LSH-verified
     pairs computed ONCE and fed to both the pair count and the
-    components stage; the keep-list tail); every aggregate is a 1-row
+    components stage; one components run feeding both the component
+    stats and the keep-list tail); every aggregate is a 1-row
     table, combined by crossJoin — a production pipeline would derive
     the same card from its persisted keep-list instead of recomputing.
     largest_component is the skew headline: a value near n_docs means
@@ -2873,13 +2774,14 @@ def dedup_report(
         .alias("n_exact_extra"),
     )
     pairs = lsh_verified_pairs(spark, sf_dir, min_jaccard=min_jaccard)
-    # pairs feed three consumers (count, components, keep-list tail);
-    # localCheckpoint materializes the verify chain once
+    # pairs feed two consumers (count, components); localCheckpoint
+    # materializes the verify chain once
     pairs = pairs.localCheckpoint(eager=False)
     npairs = pairs.agg(F.count("*").cast("long").alias("n_near_pairs"))
+    # ONE components run feeds both the component stats and the drop set
+    clusters = dedup_clusters(pairs)
     comp = (
-        dedup_clusters(pairs)
-        .groupBy("cluster_id")
+        clusters.groupBy("cluster_id")
         .agg(F.count("*").alias("sz"))
         .agg(
             F.count("*").cast("long").alias("n_components"),
@@ -2888,9 +2790,8 @@ def dedup_report(
             ),
         )
     )
-    surv = _apply_drops(spark, sf_dir, pairs).agg(
-        F.count("*").cast("long").alias("n_kept")
-    )
+    near_drop = clusters.filter(~F.col("is_keeper")).select("doc_id")
+    surv = _keep_list(docs, near_drop).agg(F.count("*").cast("long").alias("n_kept"))
     return (
         base.crossJoin(npairs)
         .crossJoin(comp)
@@ -2919,9 +2820,7 @@ def _hash_embed_sums(docs: "DataFrame", dim: int) -> "DataFrame":
     the sparse core hash_embed and hash_embed_vectors share."""
     words = docs.select(
         "doc_id",
-        F.explode(
-            F.split(F.regexp_replace(F.lower("text"), r"\s+", " "), " ")
-        ).alias("word"),
+        F.explode(_words("text")).alias("word"),
     ).filter(F.col("word") != "")
     h = _phash60(F.concat(F.lit("e:"), F.col("word")))
     hashed = words.select(
@@ -3096,8 +2995,11 @@ def rp_pair_sims(
     bucket self-join + distinct — the 64-double vectors re-join after
     dedup — so the collision shuffle is ~16 bytes/pair, and only
     surviving pairs pay the 64-dim cosine fold. The bucket self-join
-    is all-pairs with no hub-star guard (measured bucket sizes in
-    dedup_text_semantic_served)."""
+    is all-pairs with no hub-star guard, by design: a star keeps
+    components connected but drops member-member pairs, and this
+    output IS the verified pair list (a guard at LSH_MAX_BUCKET_DOCS
+    measured dropping 44 of 199 pairs at sf0.01 and 12,715 of 18,968
+    at sf0.1; bucket sizes in dedup_text_semantic_served)."""
     spark = vecs.sparkSession
     proj = spark.createDataFrame(
         [
@@ -3166,8 +3068,9 @@ def dedup_text_semantic_served(
     coins per plane, but same-generator docs still cluster. Measured
     on the hash-embed artifact, the largest bucket holds 122 of 500
     docs at sf0.01 (8 buckets over LSH_MAX_BUCKET_DOCS) and 501 of
-    5,000 at sf0.1 (180 over; 2.6M raw candidate pairs), and
-    rp_pair_sims has no hub-star guard yet."""
+    5,000 at sf0.1 (180 over; 2.6M raw candidate pairs). rp_pair_sims
+    still pairs them all-pairs, because those buckets hold real
+    near-dups (see its docstring for the pairs a guard would drop)."""
     vecs = spark.read.parquet(vectors_path).select("vec_id", "v", "w")
     if params is None:
         params = rp_lsh_params(vecs.count(), threshold, target_recall)
@@ -3345,11 +3248,7 @@ def dedup_semantic_apply(
     pairs = dedup_text_semantic_served(
         spark, vectors_path, threshold, params=params
     ).select(F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b"))
-    drop = (
-        dedup_clusters(pairs)
-        .filter(~F.col("is_keeper"))
-        .select(F.col("doc_id").alias("vec_id"))
-    )
+    drop = _near_drops(pairs).select(F.col("doc_id").alias("vec_id"))
     return (
         spark.read.parquet(vectors_path)
         .select("vec_id")
@@ -3375,13 +3274,13 @@ def tokenizer_fertility(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     groupBy shuffles ≤ n_langs rows per partition after map-side
     partial aggregation; nothing else is exchanged."""
     docs = _docs(spark, sf_dir)
-    words = F.split(F.regexp_replace(F.lower("text"), r"\s+", " "), " ")
+    words = _words("text")
     marked = F.regexp_replace("text", "[A-Za-z0-9]+", "\x01")
     alnum_runs = F.length(marked) - F.length(
         F.replace(marked, F.lit("\x01"), F.lit(""))
     )
     punct = F.length(F.regexp_replace("text", r"[A-Za-z0-9\s]", ""))
-    est = F.greatest(F.lit(1), F.floor(F.length("text") / 4)).cast("long")
+    est = _t7_tokens("text").cast("long")
     staged = docs.select(
         F.size(words).cast("long").alias("ws"),
         (alnum_runs + punct).cast("long").alias("bp"),

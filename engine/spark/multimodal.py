@@ -354,41 +354,22 @@ def image_dedup_near(
     one per band and be missed, so a caller raising max_hamming above
     3 accepts probabilistic recall, same trade the text simhash
     documents. Band-equality joins propose candidates and an exact
-    popcount(xor) verifies — never an all-pairs comparison. The bucket
-    key is ``band << 16 | band_val``, paired by _bucketed_pairs: a
+    popcount(xor) verifies — never an all-pairs comparison. The pairs
+    come from _hamming_pairs, the operator dedup_simhash also uses: a
     bucket of more than LSH_MAX_BUCKET_DOCS images (a corpus of
     identical blank images) pairs as a star around its min media_id,
     O(bucket) pairs with the same connected components, exactly like
     simhash's boilerplate case.
 
     Emits verified pairs (media_id_a < media_id_b, hamming)."""
-    from engine.spark.analytics import LSH_MAX_BUCKET_DOCS, _bucketed_pairs
+    from engine.spark.analytics import _hamming_pairs
 
-    banded = image_hashes(df).select(
-        F.col("media_id").alias("doc_id"),
-        "ahash",
-        F.explode(
-            F.array(
-                *[
-                    F.shiftright(F.col("ahash"), band * 16)
-                    .bitwiseAND(F.lit(0xFFFF))
-                    .bitwiseOR(F.lit(band << 16))
-                    for band in range(4)
-                ]
-            )
-        ).alias("bucket"),
+    hashes = image_hashes(df).select(F.col("media_id").alias("doc_id"), "ahash")
+    return _hamming_pairs(hashes, "ahash", 16, 4, max_hamming).select(
+        F.col("doc_a").alias("media_id_a"),
+        F.col("doc_b").alias("media_id_b"),
+        "hamming",
     )
-    pairs = (
-        _bucketed_pairs(banded, "ahash", LSH_MAX_BUCKET_DOCS)
-        # a pair can collide in several bands -> keep one row
-        .dropDuplicates(["doc_a", "doc_b"])
-        .select(
-            F.col("doc_a").alias("media_id_a"),
-            F.col("doc_b").alias("media_id_b"),
-            F.bit_count(F.col("pa").bitwiseXOR(F.col("pb"))).alias("hamming"),
-        )
-    )
-    return pairs.filter(F.col("hamming") <= max_hamming)
 
 
 def frame_sample(df: "DataFrame", every_n: int = 32) -> "DataFrame":

@@ -35,6 +35,23 @@ SKEW_BLOCK = 10_000
 MAX_TEXT_CHARS = 10_000_000
 
 
+def _t7_tokens(text) -> "Column":
+    """T7 token estimate, the kernel chunker's rule: max(1,
+    floor(len(text) / 4)). Every native token count uses it."""
+    return F.greatest(F.lit(1), F.floor(F.length(text) / 4))
+
+
+def _ordered_md5(entries: "Column", val: str) -> "Column":
+    """md5 over the ``val`` field of an array of structs, joined in
+    struct sort order: an arrival-order-free fingerprint of a
+    collect_list."""
+    return F.md5(
+        F.array_join(
+            F.transform(F.array_sort(entries), lambda s: s[val]), "\x01"
+        )
+    )
+
+
 def split_valid(df: "DataFrame") -> tuple["DataFrame", "DataFrame"]:
     """P2 gate: bad rows are ROUTED, not dropped — the reference
     returns structured errors (extract.py:40-68, orchestrator.py:
@@ -247,7 +264,7 @@ def with_native_post(df: "DataFrame") -> "DataFrame":
         # T7 natively: max(1, len/4) — proves parity with kernel tokens
         .withColumn(
             "estimated_tokens_native",
-            F.greatest(F.lit(1), F.floor(F.length("cleaned_text") / 4)).cast("int"),
+            _t7_tokens("cleaned_text").cast("int"),
         )
         # A7-style quality bucket over the P5 score
         .withColumn(
@@ -322,28 +339,13 @@ def dedup_conversations(per_turn: "DataFrame") -> "DataFrame":
     ).alias("h")
     blk = (F.col("turn_idx") / F.lit(SKEW_BLOCK)).cast("long").alias("blk")
     per = per_turn.select("conv_id", "turn_idx", blk, h)
-
-    def _ordered_md5(pairs_col: "Column", key: str, val: str) -> "Column":
-        return F.md5(
-            F.array_join(
-                F.transform(
-                    F.array_sort(pairs_col), lambda s: s[val]
-                ),
-                "\x01",
-            )
-        )
-
     blocks = per.groupBy("conv_id", "blk").agg(
         F.count("*").alias("n"),
-        _ordered_md5(
-            F.collect_list(F.struct("turn_idx", "h")), "turn_idx", "h"
-        ).alias("bh"),
+        _ordered_md5(F.collect_list(F.struct("turn_idx", "h")), "h").alias("bh"),
     )
     conv = blocks.groupBy("conv_id").agg(
         F.sum("n").cast("long").alias("n_turns"),
-        _ordered_md5(
-            F.collect_list(F.struct("blk", "bh")), "blk", "bh"
-        ).alias("conv_fp"),
+        _ordered_md5(F.collect_list(F.struct("blk", "bh")), "bh").alias("conv_fp"),
     )
     w = Window.partitionBy("conv_fp")
     return conv.select(
@@ -380,7 +382,7 @@ def sft_examples(
     conversation (the transcript contract), making range- and
     row-frames equivalent and context_from_idx = target − n."""
     text = F.coalesce(F.col("cleaned_text"), F.lit(""))
-    toks = F.greatest(F.lit(1), F.floor(F.length(text) / 4)).cast("long")
+    toks = _t7_tokens(text).cast("long")
     t = per_turn.select(
         "conv_id", "turn_idx", "role", toks.alias("tokens")
     )
@@ -499,9 +501,7 @@ def _gate_and_pack(
     per = per_turn.select(
         "conv_id",
         blk,
-        F.greatest(F.lit(1), F.floor(F.length(text) / 4))
-        .cast("long")
-        .alias("et"),
+        _t7_tokens(text).cast("long").alias("et"),
         (text == "").cast("long").alias("emp"),
     )
     blocks = per.groupBy("conv_id", "blk").agg(
@@ -541,9 +541,7 @@ def _gate_and_pack(
 
 
 def dedup_conversations_near(
-    per_turn: "DataFrame",
-    min_jaccard: float = 0.5,
-    max_bucket_docs: int | None = None,
+    per_turn: "DataFrame", min_jaccard: float = 0.5
 ) -> "DataFrame":
     """Near-duplicate CONVERSATION pairs — the transcript-native
     complement of exact `dedup_conversations` (re-pastes, re-runs with
@@ -561,23 +559,13 @@ def dedup_conversations_near(
 
     Output: (conv_a, conv_b, jaccard) with conv_a < conv_b.
     """
-    from engine.spark.analytics import (
-        LSH_MAX_BUCKET_DOCS,
-        _lsh_verified_pairs_docs,
-    )
+    from engine.spark.analytics import _lsh_verified_pairs_docs
 
     docs = per_turn.select(
         F.col("conv_id").alias("doc_id"),
         F.coalesce(F.col("cleaned_text"), F.lit("")).alias("text"),
     )
-    pairs = _lsh_verified_pairs_docs(
-        docs,
-        min_jaccard,
-        0.0,
-        max_bucket_docs
-        if max_bucket_docs is not None
-        else LSH_MAX_BUCKET_DOCS,
-    )
+    pairs = _lsh_verified_pairs_docs(docs, min_jaccard)
     return pairs.select(
         F.col("doc_a").alias("conv_a"),
         F.col("doc_b").alias("conv_b"),
@@ -586,9 +574,7 @@ def dedup_conversations_near(
 
 
 def dedup_apply_conversations(
-    per_turn: "DataFrame",
-    min_jaccard: float = 0.5,
-    max_bucket_docs: int | None = None,
+    per_turn: "DataFrame", min_jaccard: float = 0.5
 ) -> "DataFrame":
     """Surviving conv_ids after BOTH conversation-dedup arms — the
     transcript analogue of dedup_apply_lsh, the keep-list a training
@@ -604,23 +590,17 @@ def dedup_apply_conversations(
     (mirroring dedup_apply_lsh / its recursive-CTE oracle shape), so a
     conversation that is both an exact and a near duplicate is dropped
     exactly once and the min-id original always survives."""
-    from engine.spark.analytics import dedup_clusters
+    from engine.spark.analytics import _near_drops
 
     exact_drop = (
         dedup_conversations(per_turn)
         .filter(~F.col("is_keeper"))
         .select("conv_id")
     )
-    pairs = dedup_conversations_near(
-        per_turn, min_jaccard, max_bucket_docs
-    ).select(
+    pairs = dedup_conversations_near(per_turn, min_jaccard).select(
         F.col("conv_a").alias("doc_a"), F.col("conv_b").alias("doc_b")
     )
-    near_drop = (
-        dedup_clusters(pairs)
-        .filter(~F.col("is_keeper"))
-        .select(F.col("doc_id").alias("conv_id"))
-    )
+    near_drop = _near_drops(pairs).select(F.col("doc_id").alias("conv_id"))
     return (
         per_turn.select("conv_id")
         .distinct()
@@ -656,7 +636,7 @@ def preference_pairs(per_turn: "DataFrame") -> "DataFrame":
     h = F.md5(
         F.concat(F.col("turn_idx").cast("string"), F.lit(":"), text)
     )
-    toks = F.greatest(F.lit(1), F.floor(F.length(text) / 4)).cast("long")
+    toks = _t7_tokens(text).cast("long")
     is_asst = F.col("role") == "assistant"
     is_user = F.col("role") == "user"
     per = per_turn.select(
@@ -668,13 +648,6 @@ def preference_pairs(per_turn: "DataFrame") -> "DataFrame":
         F.when(is_user, F.struct(F.col("turn_idx").alias("i"), text.alias("t")))
         .alias("u"),
     )
-
-    def _ordered_md5(pairs_col: "Column", val: str) -> "Column":
-        return F.md5(
-            F.array_join(
-                F.transform(F.array_sort(pairs_col), lambda s: s[val]), "\x01"
-            )
-        )
 
     blocks = per.groupBy("conv_id", "blk").agg(
         F.sum("atoks").alias("atoks"),
@@ -766,7 +739,7 @@ def conversation_branches(
     h = F.md5(
         F.concat(F.col("turn_idx").cast("string"), F.lit(":"), text)
     )
-    toks = F.greatest(F.lit(1), F.floor(F.length(text) / 4)).cast("long")
+    toks = _t7_tokens(text).cast("long")
     t = per_turn.filter(F.col("turn_idx") < max_depth).select(
         "conv_id", "turn_idx", h.alias("h"), toks.alias("toks")
     )

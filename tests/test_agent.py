@@ -272,8 +272,8 @@ def test_loop_and_fit_match_python_reference_randomized(spark):
             min((st for _, st in loops), default=None),
             max(runs) >= 3,
         )
-        # python reference: prefix fit under est = len(text)//4 + 1
-        ests = [len(t) // 4 + 1 for _, _, t in actions]
+        # python reference: prefix fit under T7, est = max(1, len(text)//4)
+        ests = [max(1, len(t) // 4) for _, _, t in actions]
         cum, fit_n, fit_tok = 0, 0, 0
         for e in ests:
             cum += e
@@ -590,20 +590,21 @@ def test_assistant_echo_entry_planting_not_vacuous(spark):
 
 
 def test_context_fit(spark):
-    """Golden prefix-fit: est = floor(len/4)+1, the fit is the longest
-    stable-order prefix whose running sum stays within the limit, and
-    a first turn that alone exceeds the limit reports a zero fit."""
+    """Golden prefix-fit: est = max(1, floor(len/4)) (T7), the fit is
+    the longest stable-order prefix whose running sum stays within the
+    limit, and a first turn that alone exceeds the limit reports a
+    zero fit."""
     from engine.spark.agent import context_fit
 
     rows = [
         # ests 2,2,2 -> cum 2,4,6; limit 5 keeps 2 turns (4 tokens)
-        ("a", 0, "user", "aaaa", None, _ts(0)),
-        ("a", 1, "assistant", "bbbb", None, _ts(1)),
-        ("a", 2, "user", "cccc", None, _ts(2)),
-        # ests 1,1 -> cum 1,2; fits whole
+        ("a", 0, "user", "aaaaaaaa", None, _ts(0)),
+        ("a", 1, "assistant", "bbbbbbbb", None, _ts(1)),
+        ("a", 2, "user", "cccccccc", None, _ts(2)),
+        # ests 1,1 (the T7 floor of 1) -> cum 1,2; fits whole
         ("b", 0, "user", "", None, _ts(0)),
         ("b", 1, "assistant", "xy", None, _ts(1)),
-        # first turn est 11 > 5 -> nothing fits
+        # first turn est 10 > 5 -> nothing fits
         ("c", 0, "user", "z" * 40, None, _ts(0)),
     ]
     df = spark.createDataFrame(

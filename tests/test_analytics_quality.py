@@ -521,16 +521,22 @@ def test_lsh_skew_guard_bounds_pairs(spark, boilerplate_dir):
     hub-star guard the 150-doc boilerplate bucket emits O(n) pairs; an
     unguarded run emits the full O(n^2). Connectivity is preserved —
     the star still joins all 150 docs into one component."""
-    from engine.spark.analytics import dedup_clusters, dedup_minhash_lsh
+    from engine.spark.analytics import (
+        _bucketed_pairs,
+        _minhash_bands,
+        dedup_clusters,
+        dedup_minhash_lsh,
+    )
 
     guarded = dedup_minhash_lsh(spark, boilerplate_dir).collect()
     boiler_pairs = [r for r in guarded if r.doc_a < 500 and r.doc_b < 500]
     assert len(boiler_pairs) == 149, len(boiler_pairs)  # star, not n^2/2
     assert all(r.est_jaccard == 1.0 and r.doc_a == 0 for r in boiler_pairs)
 
-    unguarded = dedup_minhash_lsh(
-        spark, boilerplate_dir, max_bucket_docs=10**9
-    ).count()
+    bands = _minhash_bands(
+        spark.read.parquet(f"{boilerplate_dir}/documents.parquet")
+    )
+    unguarded = _bucketed_pairs(bands, "sig", 10**9).count()
     assert unguarded >= 150 * 149 // 2  # the quadratic blowup the guard stops
 
     pairs = spark.createDataFrame(
@@ -968,7 +974,7 @@ def test_token_budget_select_prefix_rule(spark, tmp_path):
 
     def expect(budget):
         scored = sorted(
-            ((len(set(t.split())), len(t) // 4 + 1, i) for i, t in rows),
+            ((len(set(t.split())), max(1, len(t) // 4), i) for i, t in rows),
             key=lambda x: (-x[0], x[2]),
         )
         out, acc = set(), 0
@@ -1666,6 +1672,25 @@ def test_dedup_report_planted(spark, planted_dir):
     assert row.largest_component == 2   # planted dups are pairs
     assert row.n_dropped >= 3
     assert row.dup_fraction == round(row.n_dropped / row.n_docs, 6)
+
+
+def test_dedup_report_job_count(spark):
+    """One connected-components run per dataset card: the component
+    stats and the keep-list drop set share one clusters frame. Running
+    components twice (once per consumer) cost 55 jobs per call at
+    sf0.01 (result collect included); one run takes 41."""
+    from engine.spark.analytics import dedup_report
+
+    sc = spark.sparkContext
+    group = "dedup_report_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        row = dedup_report(spark, "/root/testdata/sf0.01").collect()[0]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert row.n_components > 0
+    assert 0 < jobs < 55, jobs
 
 
 def test_rp_lsh_params_keyspace_and_recall():
