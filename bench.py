@@ -95,9 +95,10 @@ def _run_extraction(
 
     path = _materialize_inputs(spark, sf_dir, n_convs)
     t = spark.read.parquet(path)
-    # offset-only spans: identical information (content reconstructs
-    # losslessly, parity-tested) without shipping a second copy of the
-    # cleaned text through Arrow — measured +53% at local[24]. And for
+    # offset-only spans: identical information (with_span_content
+    # rebuilds each span's content natively, stripped as the chunker
+    # strips it; parity-tested on single- and multi-chunk turns)
+    # without shipping a second copy of the cleaned text through Arrow — measured +53% at local[24]. And for
     # a stored parquet source the salting shuffle is skipped: the
     # writer's file/row-group layout already bounds any task's share
     # (run_extraction docstring; measured +11% at local[24]; the

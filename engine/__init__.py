@@ -8,7 +8,7 @@ vectorized, distributed pipeline over a table of multi-turn transcripts
 Layout:
   engine.kernel — pure-Python deterministic transform kernel (the
       single-node oracle; unit-testable without Spark).
-  engine.spark  — distribution layer: schemas, the fused mapInPandas
+  engine.spark  — distribution layer: schemas, the fused Arrow-batched
       extraction stage, partitioning/skew/ordering, checkpointed sink,
       analytics operators.
 """

@@ -4,7 +4,7 @@ Produces multi-turn conversation/agent transcripts with the exact input
 shape from BASELINE.json input_hint: (conv_id, turn_idx, role, text,
 tool, ts). Content is seeded per (conv_id, turn_idx) via blake2b so any
 worker can generate any row independently of partitioning — the Spark
-synthesizer (engine.spark.transcripts) fans this out with mapInPandas.
+synthesizer (engine.spark.transcripts) fans this out over Arrow batches.
 
 Payload mix per turn (deterministic): plain prose with PDF-ish
 artifacts (ligatures, page numbers, repeated headers, curly quotes),

@@ -8,7 +8,7 @@ passthrough) → clean → chunk → detect type → rule-based field extract
 (deterministic T11 stand-in) → post-process/validate → confidence.
 
 The Spark stage (engine.spark.stage) calls exactly this function per
-row inside a mapInPandas batch, so per-turn equality with this oracle
+row inside an Arrow batch, so per-turn equality with this oracle
 holds by construction and is verified by tests/test_spark_pipeline.py.
 """
 

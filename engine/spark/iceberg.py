@@ -2,11 +2,12 @@
 
 The north rule's production sink is an Iceberg table partitioned by
 bucket(conv_id) with MERGE INTO upserts and per-partition lineage
-manifests. The sandbox has no iceberg-spark-runtime jar, so this module
-is code-complete but gated: ``iceberg_available(spark)`` probes for the
-catalog classes and every entry point falls back cleanly (callers use
-the plain-parquet sink in engine.spark.job, which preserves the same
-idempotent-overwrite + checkpoint semantics).
+manifests. This MERGE sink is not wired yet: no job imports this
+module, and it waits for the iceberg-spark-runtime jar, which the
+sandbox lacks. ``iceberg_available(spark)`` probes for the catalog
+classes. The jobs write the plain-parquet sink in engine.spark.job,
+and the DDL here takes its column lists from the schemas that sink
+writes, so the two cannot drift apart.
 
 To enable on a real cluster:
     spark-submit \
@@ -42,42 +43,41 @@ def iceberg_available(spark: "SparkSession") -> bool:
     )
 
 
+def table_columns(spark: "SparkSession") -> dict[str, str]:
+    """DDL column list per table, from the schemas the parquet job
+    writes: results as run_extraction returns them (analysed over an
+    empty input, so no Spark job runs), metrics and checkpoints as
+    engine.spark.job writes them, the checkpoints plus their
+    ``snapshot_id`` lineage pointer."""
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from engine.spark.job import CHECKPOINT_SCHEMA, METRICS_SCHEMA
+    from engine.spark.pipeline import run_extraction
+    from engine.spark.schemas import TRANSCRIPT_SCHEMA
+
+    empty = spark.createDataFrame([], TRANSCRIPT_SCHEMA)
+    schemas = {
+        RESULTS_TABLE: run_extraction(empty, num_partitions=1).schema,
+        CHECKPOINT_TABLE: from_arrow_schema(CHECKPOINT_SCHEMA).add(
+            "snapshot_id", T.LongType()
+        ),
+        METRICS_TABLE: from_arrow_schema(METRICS_SCHEMA),
+    }
+    return {
+        table: ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema)
+        for table, schema in schemas.items()
+    }
+
+
 def ensure_tables(spark: "SparkSession") -> None:
     """DDL for the results/checkpoint/metrics tables; bucket(conv_id)
     partitioning bounds shuffle fan-in and enables partition pruning on
     conv_id point lookups."""
     spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {CATALOG}.db")
-    spark.sql(
-        f"""
-        CREATE TABLE IF NOT EXISTS {RESULTS_TABLE} (
-            conv_id STRING, turn_idx INT, role STRING, tool STRING,
-            ts TIMESTAMP, payload_kind STRING, cleaned_text STRING,
-            spans ARRAY<STRUCT<content: STRING, index: INT,
-                start_char: BIGINT, end_char: BIGINT,
-                estimated_tokens: INT>>,
-            doc_type STRING, fields_json STRING,
-            overall_confidence DOUBLE, quality_score DOUBLE,
-            is_empty BOOLEAN, bytes_in BIGINT, part_id INT
-        ) USING iceberg PARTITIONED BY (bucket(64, conv_id))
-        """
-    )
-    spark.sql(
-        f"""
-        CREATE TABLE IF NOT EXISTS {CHECKPOINT_TABLE} (
-            run_id STRING, part_id INT, status STRING, n_turns BIGINT,
-            snapshot_id BIGINT
-        ) USING iceberg
-        """
-    )
-    spark.sql(
-        f"""
-        CREATE TABLE IF NOT EXISTS {METRICS_TABLE} (
-            run_id STRING, part_id INT, n_turns BIGINT,
-            bytes_parsed BIGINT, n_empty BIGINT, empty_rate DOUBLE,
-            turns_per_sec DOUBLE
-        ) USING iceberg
-        """
-    )
+    for table, columns in table_columns(spark).items():
+        spec = " PARTITIONED BY (bucket(64, conv_id))" if table == RESULTS_TABLE else ""
+        spark.sql(f"CREATE TABLE IF NOT EXISTS {table} ({columns}) USING iceberg{spec}")
 
 
 def merge_results(spark: "SparkSession", results: "DataFrame") -> None:

@@ -1,8 +1,8 @@
 """Checkpointed, resumable extraction job with per-partition lineage
 and metrics (north rule: resume at partition granularity).
 
-Layout under ``out_dir`` (plain-parquet sink; see engine.spark.iceberg
-for the Iceberg MERGE variant used when a catalog is configured):
+Layout under ``out_dir`` (plain-parquet sink; the Iceberg MERGE
+variant in engine.spark.iceberg is not wired yet):
 
     results/part_id=K/*.parquet   — extraction output, one dir per
                                     deterministic partition (dynamic
@@ -60,6 +60,10 @@ from engine.spark.pipeline import part_expr, run_extraction, split_valid
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame, SparkSession
 
+# independent slices of the partition space per run; each slice is one
+# atomic unit of restart
+PARTITION_BATCHES = 4
+
 METRICS_SCHEMA = pa.schema([
     ("run_id", pa.string()), ("part_id", pa.int32()),
     ("n_turns", pa.int64()), ("bytes_parsed", pa.int64()),
@@ -106,11 +110,10 @@ def run_checkpointed(
     out_dir: str,
     run_id: str = "run-1",
     num_partitions: int | None = None,
-    partition_batches: int = 4,
     fail_after_batches: int | None = None,
 ) -> "DataFrame":
     """Run extraction over ``transcripts``, committing results +
-    checkpoint rows in ``partition_batches`` independent slices of the
+    checkpoint rows in ``PARTITION_BATCHES`` independent slices of the
     partition space (each slice = one atomic unit of restart).
 
     ``fail_after_batches`` injects a crash for the resume test.
@@ -158,7 +161,7 @@ def run_checkpointed(
             )
             .collect()
         }
-        slice_size = max(1, (num_partitions + partition_batches - 1) // partition_batches)
+        slice_size = max(1, (num_partitions + PARTITION_BATCHES - 1) // PARTITION_BATCHES)
         batches_done = 0
         for lo in range(0, num_partitions, slice_size):
             batch = [p for p in range(lo, min(lo + slice_size, num_partitions)) if p in todo]

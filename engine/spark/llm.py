@@ -9,8 +9,8 @@ rule-based extractors (engine.kernel.fields) produce the gated
 fields_json. This module provides the capability as an optional,
 pluggable batch-inference stage:
 
-- one `mapInPandas` hop over Arrow batches (never per-row HTTP from
-  the driver);
+- one Arrow-batched hop, ``stage.map_batches`` (never per-row HTTP
+  from the driver);
 - the client is a plain callable ``list[str] -> list[str]`` resolved
   per executor (lazy, picklable factory) — wrap any HTTP endpoint
   there. The default is a deterministic fake that echoes the
@@ -29,17 +29,15 @@ pluggable batch-inference stage:
 from __future__ import annotations
 
 import json
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 from typing import TYPE_CHECKING
 
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from engine.spark.stage import worker_setup
+from engine.spark.stage import map_batches
 
 if TYPE_CHECKING:
-    import pandas as pd
-
+    import pyarrow as pa
     from pyspark.sql import DataFrame
 
 # prompt text cap (reference prompts.py:394,407-410)
@@ -102,48 +100,49 @@ def llm_enrich(
     type_col: str = "doc_type",
     batch_rows: int = 64,
 ) -> "DataFrame":
-    """Add llm_json / llm_was_repaired via one mapInPandas hop.
+    """Add llm_json / llm_was_repaired via one Arrow-batched hop.
 
-    ``client_factory`` is called once per Python worker (lazy init of
-    connections/clients, mirroring the reference's client singleton,
-    client.py:636-645); it must be picklable. ``batch_rows`` caps the
+    ``client_factory`` is called once per task, on its first batch
+    (lazy init of connections/clients, mirroring the reference's client
+    singleton, client.py:636-645); it must be picklable. ``batch_rows`` caps the
     per-call fan-in so one slow remote batch never pins a whole Arrow
     batch's latency.
     """
     factory = client_factory or fake_client_factory
     schema = T.StructType(list(results.schema.fields) + LLM_FIELDS)
-    in_cols = list(results.columns)
+    client = None
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        worker_setup()
+    def run(batch: "pa.RecordBatch") -> list[dict]:
+        nonlocal client
         from engine.kernel.jsonrepair import parse_json_loose
 
-        client = factory()
-        for pdf in batches:
-            prompts = [
-                build_prompt(t, d)
-                for t, d in zip(pdf[text_col].fillna(""), pdf[type_col].fillna(""))
-            ]
-            raw: list[str] = []
-            for i in range(0, len(prompts), batch_rows):
-                chunk = prompts[i : i + batch_rows]
-                replies = client(chunk)
-                if len(replies) != len(chunk):
-                    # surface the misbehaving client call precisely: a
-                    # dropped/padded reply would otherwise either crash
-                    # opaquely in pandas or silently misalign rows
-                    raise ValueError(
-                        f"LLM client returned {len(replies)} replies for "
-                        f"{len(chunk)} prompts (sub-batch at offset {i})"
-                    )
-                raw.extend(replies)
-            parsed = [parse_json_loose(r) for r in raw]
-            pdf = pdf.copy()
-            pdf["llm_json"] = [
-                json.dumps(data, sort_keys=True) if data is not None else None
-                for data, _rep, _strat in parsed
-            ]
-            pdf["llm_was_repaired"] = [bool(rep) for _d, rep, _s in parsed]
-            yield pdf[in_cols + ["llm_json", "llm_was_repaired"]]
+        if client is None:
+            client = factory()
+        prompts = [
+            build_prompt(t, d)
+            for t, d in zip(
+                batch.column(text_col).to_pylist(), batch.column(type_col).to_pylist()
+            )
+        ]
+        raw: list[str] = []
+        for i in range(0, len(prompts), batch_rows):
+            chunk = prompts[i : i + batch_rows]
+            replies = client(chunk)
+            if len(replies) != len(chunk):
+                # surface the misbehaving client call precisely: a
+                # dropped/padded reply would otherwise either crash
+                # opaquely in the Arrow encode or silently misalign rows
+                raise ValueError(
+                    f"LLM client returned {len(replies)} replies for "
+                    f"{len(chunk)} prompts (sub-batch at offset {i})"
+                )
+            raw.extend(replies)
+        return [
+            {
+                "llm_json": json.dumps(data, sort_keys=True) if data is not None else None,
+                "llm_was_repaired": bool(rep),
+            }
+            for data, rep, _strat in map(parse_json_loose, raw)
+        ]
 
-    return results.mapInPandas(run, schema=schema)
+    return map_batches(results, run, schema, keep=results.columns)

@@ -186,7 +186,7 @@ def http_client_factory(
     Config travels by value (dataclasses), so the returned factory
     serializes cleanly to executors; each Python worker materializes
     its own client on first use. Prompts in a batch run sequentially —
-    the mapInPandas stage already fans batches across workers, and the
+    the Arrow-batched stage already fans batches across workers, and the
     retry state is deliberately per-prompt (one poisoned document must
     not burn the batch's retry budget)."""
 

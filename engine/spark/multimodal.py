@@ -1,5 +1,6 @@
 """Multimodal column plumbing: image/audio/video as opaque binary
-columns with typed metadata, processed by Arrow-batched mapInPandas.
+columns with typed metadata, processed by Arrow-batched hops
+(``stage.map_batches``).
 
 ``decode_stub=True`` (default) runs a deterministic fake decoder that
 parses our synthetic header format. ``decode_stub=False`` is the REAL
@@ -22,15 +23,14 @@ Synthetic payload format (deterministic, produced by make_media_table):
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 from typing import TYPE_CHECKING
 
 from pyspark.sql import functions as F
 
-from engine.spark.stage import worker_setup
+from engine.spark.stage import map_batches
 
 if TYPE_CHECKING:
-    import pandas as pd
+    import pyarrow as pa
     from pyspark.sql import DataFrame, SparkSession
 
 MEDIA_SCHEMA = (
@@ -46,36 +46,28 @@ FEATURE_SCHEMA = (
 def make_media_table(spark: "SparkSession", n: int = 64) -> "DataFrame":
     """Deterministic binary media table (seeded bytes, no codecs)."""
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        worker_setup()
+    def gen(batch: "pa.RecordBatch") -> list[dict]:
         import hashlib
 
-        import pandas as pd
+        rows = []
+        for i in batch.column("id").to_pylist():
+            seed = hashlib.blake2b(f"media{i}".encode(), digest_size=8).digest()
+            body = (seed * ((i % 97) + 4))[: 64 + (i % 512)]
+            if i % 2 == 0:
+                w, h = 8 + i % 24, 8 + (i // 2) % 16
+                payload = b"IMG1" + struct.pack(">II", w, h) + body
+                kind = "image"
+            else:
+                sr, ns = 16000, 128 + (i % 256)
+                payload = b"AUD1" + struct.pack(">II", sr, ns) + body
+                kind = "audio"
+            rows.append({
+                "media_id": i, "kind": kind, "payload": payload,
+                "source": f"src{i % 7}", "ts": 1735689600_000_000 + i * 1_000_000,
+            })
+        return rows
 
-        for pdf in batches:
-            rows = {"media_id": [], "kind": [], "payload": [], "source": [], "ts_us": []}
-            for i in pdf["id"].tolist():
-                seed = hashlib.blake2b(f"media{i}".encode(), digest_size=8).digest()
-                body = (seed * ((i % 97) + 4))[: 64 + (i % 512)]
-                if i % 2 == 0:
-                    w, h = 8 + i % 24, 8 + (i // 2) % 16
-                    payload = b"IMG1" + struct.pack(">II", w, h) + body
-                    kind = "image"
-                else:
-                    sr, ns = 16000, 128 + (i % 256)
-                    payload = b"AUD1" + struct.pack(">II", sr, ns) + body
-                    kind = "audio"
-                rows["media_id"].append(i)
-                rows["kind"].append(kind)
-                rows["payload"].append(payload)
-                rows["source"].append(f"src{i % 7}")
-                rows["ts_us"].append(1735689600_000_000 + i * 1_000_000)
-            yield pd.DataFrame(rows)
-
-    df = spark.range(0, n, 1).mapInPandas(
-        gen, "media_id long, kind string, payload binary, source string, ts_us long"
-    )
-    return df.withColumn("ts", F.timestamp_micros("ts_us")).drop("ts_us")
+    return map_batches(spark.range(0, n, 1), gen, MEDIA_SCHEMA)
 
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -148,36 +140,20 @@ def extract_media_features(df: "DataFrame", decode_stub: bool = True) -> "DataFr
     Real path (decode_stub=False) is the exact same plumbing with the
     codec call swapped in; batch shape and output schema are identical.
     """
+    decode = _decode_fake if decode_stub else _decode_real
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        worker_setup()
-        import pandas as pd
+    def run(batch: "pa.RecordBatch") -> list[dict]:
+        return [
+            {**decode(b, kind), "n_bytes": len(b), "mean_byte": (sum(b) / len(b)) if b else 0.0}
+            for kind, b in zip(
+                batch.column("kind").to_pylist(), batch.column("payload").to_pylist()
+            )
+        ]
 
-        decode = _decode_fake if decode_stub else _decode_real
-        for pdf in batches:
-            recs = []
-            for media_id, kind, payload in zip(
-                pdf["media_id"], pdf["kind"], pdf["payload"]
-            ):
-                b = bytes(payload)
-                meta = decode(b, kind)
-                recs.append(
-                    {
-                        "media_id": int(media_id),
-                        "kind": kind,
-                        "n_bytes": len(b),
-                        "width": meta["width"],
-                        "height": meta["height"],
-                        "sample_rate": meta["sample_rate"],
-                        "n_samples": meta["n_samples"],
-                        "mean_byte": (sum(b) / len(b)) if b else 0.0,
-                        "frame_count": meta["frame_count"],
-                        "ok": meta["ok"],
-                    }
-                )
-            yield pd.DataFrame(recs)
-
-    return df.select("media_id", "kind", "payload").mapInPandas(run, FEATURE_SCHEMA)
+    return map_batches(
+        df.select("media_id", "kind", "payload"), run, FEATURE_SCHEMA,
+        keep=("media_id", "kind"),
+    )
 
 
 RESIZE_SCHEMA = (
@@ -203,76 +179,63 @@ def resize_images(
       source codec). Undecodable images raise the honest
       NotImplementedError from _decode_real."""
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        worker_setup()
-        import pandas as pd
+    def run(batch: "pa.RecordBatch") -> list[dict]:
+        recs = []
+        for media_id, kind, b in zip(*(c.to_pylist() for c in batch.columns)):
+            if kind != "image":
+                continue
+            if not decode_stub:
+                from engine.kernel.png import decode_png, encode_png
 
-        for pdf in batches:
-            recs = []
-            for media_id, kind, payload in zip(
-                pdf["media_id"], pdf["kind"], pdf["payload"]
-            ):
-                if kind != "image":
-                    continue
-                b = bytes(payload)
-                if not decode_stub:
-                    from engine.kernel.png import decode_png, encode_png
+                if b[:8] == _PNG_SIG:
+                    w, h, ch, pixels = decode_png(b)
+                elif b[:3] == _JPEG_SIG:
+                    from engine.kernel.jpeg import decode_jpeg
 
-                    if b[:8] == _PNG_SIG:
-                        w, h, ch, pixels = decode_png(b)
-                    elif b[:3] == _JPEG_SIG:
-                        from engine.kernel.jpeg import decode_jpeg
-
-                        w, h, ch, pixels = decode_jpeg(b)
-                    else:
-                        _decode_real(b, kind)  # honest raise
-                    out_px = bytearray()
-                    for y in range(out_h):
-                        sy = (y * h) // out_h
-                        for x in range(out_w):
-                            sx = (x * w) // out_w
-                            base = (sy * w + sx) * ch
-                            out_px += pixels[base : base + ch]
-                    recs.append(
-                        {"media_id": int(media_id), "width": int(w),
-                         "height": int(h), "out_width": out_w,
-                         "out_height": out_h,
-                         "payload": encode_png(
-                             out_w, out_h, bytes(out_px), channels=ch
-                         ),
-                         "ok": True}
-                    )
-                    continue
-                ok = b[:4] == b"IMG1" and len(b) >= 12
-                if not ok:
-                    recs.append(
-                        {"media_id": int(media_id), "width": None,
-                         "height": None, "out_width": out_w,
-                         "out_height": out_h, "payload": b"", "ok": False}
-                    )
-                    continue
-                w, h = struct.unpack(">II", b[4:12])
-                body = b[12:] or b"\x00"
-                out = bytearray(b"IMG1" + struct.pack(">II", out_w, out_h))
+                    w, h, ch, pixels = decode_jpeg(b)
+                else:
+                    _decode_real(b, kind)  # honest raise
+                out_px = bytearray()
                 for y in range(out_h):
                     sy = (y * h) // out_h
                     for x in range(out_w):
                         sx = (x * w) // out_w
-                        out.append(body[(sy * w + sx) % len(body)])
+                        base = (sy * w + sx) * ch
+                        out_px += pixels[base : base + ch]
                 recs.append(
-                    {"media_id": int(media_id), "width": int(w),
+                    {"media_id": media_id, "width": int(w),
                      "height": int(h), "out_width": out_w,
-                     "out_height": out_h, "payload": bytes(out), "ok": True}
+                     "out_height": out_h,
+                     "payload": encode_png(
+                         out_w, out_h, bytes(out_px), channels=ch
+                     ),
+                     "ok": True}
                 )
-            yield pd.DataFrame(
-                recs,
-                columns=["media_id", "width", "height", "out_width",
-                         "out_height", "payload", "ok"],
+                continue
+            ok = b[:4] == b"IMG1" and len(b) >= 12
+            if not ok:
+                recs.append(
+                    {"media_id": media_id, "width": None,
+                     "height": None, "out_width": out_w,
+                     "out_height": out_h, "payload": b"", "ok": False}
+                )
+                continue
+            w, h = struct.unpack(">II", b[4:12])
+            body = b[12:] or b"\x00"
+            out = bytearray(b"IMG1" + struct.pack(">II", out_w, out_h))
+            for y in range(out_h):
+                sy = (y * h) // out_h
+                for x in range(out_w):
+                    sx = (x * w) // out_w
+                    out.append(body[(sy * w + sx) % len(body)])
+            recs.append(
+                {"media_id": media_id, "width": int(w),
+                 "height": int(h), "out_width": out_w,
+                 "out_height": out_h, "payload": bytes(out), "ok": True}
             )
+        return recs
 
-    return df.select("media_id", "kind", "payload").mapInPandas(
-        run, RESIZE_SCHEMA
-    )
+    return map_batches(df.select("media_id", "kind", "payload"), run, RESIZE_SCHEMA)
 
 
 def _ahash64(payload: bytes) -> int | None:
@@ -320,27 +283,19 @@ def image_hashes(df: "DataFrame") -> "DataFrame":
     output is 16 bytes/row no matter how large the images are, so
     everything downstream (exact groups, banded near-dup joins) runs
     on a vanishing fraction of the corpus bytes."""
-    from collections.abc import Iterator as _It
 
-    def run(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
-        worker_setup()
-        import pandas as pd
+    def run(batch: "pa.RecordBatch") -> list[dict]:
+        recs = []
+        for media_id, kind, payload in zip(*(c.to_pylist() for c in batch.columns)):
+            if kind != "image":
+                continue
+            h = _ahash64(payload)
+            if h is not None:
+                recs.append({"media_id": media_id, "ahash": h})
+        return recs
 
-        for pdf in batches:
-            ids, hs = [], []
-            for media_id, kind, payload in zip(
-                pdf["media_id"], pdf["kind"], pdf["payload"]
-            ):
-                if kind != "image":
-                    continue
-                h = _ahash64(bytes(payload))
-                if h is not None:
-                    ids.append(int(media_id))
-                    hs.append(h)
-            yield pd.DataFrame({"media_id": ids, "ahash": hs})
-
-    return df.select("media_id", "kind", "payload").mapInPandas(
-        run, "media_id long, ahash long"
+    return map_batches(
+        df.select("media_id", "kind", "payload"), run, "media_id long, ahash long"
     )
 
 

@@ -195,7 +195,7 @@ def run_extraction(
     repartitionById sends part_id p to partition p, so each task
     extracts exactly one part_id."""
     if num_partitions is None:
-        # 4x task slots: pandas-UDF task durations vary with document
+        # 4x task slots: Python-hop task durations vary with document
         # mix, so finer tasks keep all workers busy (measured: 2x left
         # ~15% of cores idle to stragglers at local[32])
         num_partitions = df.sparkSession.sparkContext.defaultParallelism * 4
@@ -230,21 +230,34 @@ def run_extraction(
     )
 
 
+# the code points Python's str.isspace() accepts, which str.strip() removes
+PY_WHITESPACE = (
+    "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680"
+    + "".join(map(chr, range(0x2000, 0x200B)))
+    + "\u2028\u2029\u202f\u205f\u3000"
+)
+
+
 def with_span_content(df: "DataFrame") -> "DataFrame":
     """Rebuild full span structs from narrow (offset-only) spans, all
-    native: content = substring(cleaned_text, start_char+1, len). The
-    result is byte-identical to span_content=True output
-    (parity-tested) because chunk content is by construction an exact
-    slice of the cleaned text (chunker emits [start_char:end_char])."""
+    native: content = substring(cleaned_text, start_char+1, len),
+    stripped of PY_WHITESPACE. The result is byte-identical to
+    span_content=True output (parity-tested, multi-chunk turns
+    included): the chunker emits text[start_char:end_char].strip(), and
+    a single chunk is the whole cleaned text, which is already
+    stripped."""
     text = F.col("cleaned_text")
     return df.withColumn(
         "spans",
         F.transform(
             "spans",
             lambda s: F.struct(
-                text.substr(
-                    (s["start_char"] + 1).cast("int"),
-                    (s["end_char"] - s["start_char"]).cast("int"),
+                F.trim(
+                    text.substr(
+                        (s["start_char"] + 1).cast("int"),
+                        (s["end_char"] - s["start_char"]).cast("int"),
+                    ),
+                    F.lit(PY_WHITESPACE),
                 ).alias("content"),
                 s["index"].alias("index"),
                 s["start_char"].alias("start_char"),

@@ -2,7 +2,7 @@
 
 Local-mode settings mirror what the spark-submit deployment sets on a
 real cluster: AQE on (runtime coalescing + skew-join splitting), Arrow
-for every pandas UDF exchange, shuffle partitions sized to cores.
+for every Python-hop exchange, shuffle partitions sized to cores.
 """
 
 from __future__ import annotations
@@ -42,7 +42,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "12g"))
         # single-JVM local mode shares cores between the JVM and the N
-        # Python workers of the pandas stage; uncapped, the collector
+        # Python workers of the extraction stage; uncapped, the collector
         # spawns ~ncpu GC threads that stampede the workers (measured
         # +28% extraction throughput at local[32] with the cap). On a
         # real cluster the same flags go in spark.executor.extraJavaOptions.

@@ -11,7 +11,7 @@ Structured Streaming for incremental arrival of transcript files:
   checkpointLocation + idempotent per-(conv_id, turn_idx) sink.
 - ``stream_quality_drift``: the continuously-maintained variant of
   monitor.quality_drift — a genuinely stateful streaming aggregation
-  (extraction stage as a stateless mapInPandas on the stream, then
+  (extraction stage as a stateless Arrow-batched hop on the stream, then
   watermark + event-time tumbling window). Late turns within the
   watermark land in their correct window; a window is emitted exactly
   once, when the watermark passes its end (append mode), so the sink

@@ -3,7 +3,7 @@
 Two sources for the (conv_id, turn_idx, role, text, tool, ts) table:
 
 1. ``synthesize_transcripts`` — pure generator scale-out: spark.range
-   over conversation indices, mapInPandas expanding each conversation
+   over conversation indices, one Arrow-batched hop expanding each conversation
    into its turns via engine.kernel.gen (seeded per (conv_id,
    turn_idx), so output is identical regardless of partitioning or
    parallelism). Includes deterministic mega-thread skew.
@@ -16,16 +16,15 @@ Two sources for the (conv_id, turn_idx, role, text, tool, ts) table:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from typing import TYPE_CHECKING
 
 from pyspark.sql import functions as F
 
 from engine.spark.schemas import TRANSCRIPT_SCHEMA
-from engine.spark.stage import worker_setup
+from engine.spark.stage import map_batches
 
 if TYPE_CHECKING:
-    import pandas as pd
+    import pyarrow as pa
     from pyspark.sql import DataFrame, SparkSession
 
 
@@ -44,40 +43,21 @@ def synthesize_transcripts(
     """
     parallelism = parallelism or spark.sparkContext.defaultParallelism
 
-    def expand(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        worker_setup()
-        import pandas as pd
-
+    def expand(batch: "pa.RecordBatch") -> list[dict]:
         from engine.kernel.gen import make_turn, turns_for_conv
 
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "conv_id": [], "turn_idx": [], "role": [],
-                "text": [], "tool": [], "ts_us": [],
-            }
-            for conv_index in pdf["id"].tolist():
-                conv_id = f"conv-{conv_index:09d}"
-                for turn_idx in range(turns_for_conv(conv_index, scale_turns)):
-                    t = make_turn(conv_id, turn_idx)
-                    rows["conv_id"].append(conv_id)
-                    rows["turn_idx"].append(turn_idx)
-                    rows["role"].append(t["role"])
-                    rows["text"].append(t["text"])
-                    rows["tool"].append(t["tool"])
-                    rows["ts_us"].append(t["ts_us"])
-            out = pd.DataFrame(rows)
-            out["turn_idx"] = out["turn_idx"].astype("int32")
-            yield out
+        rows = []
+        for conv_index in batch.column("id").to_pylist():
+            conv_id = f"conv-{conv_index:09d}"
+            for turn_idx in range(turns_for_conv(conv_index, scale_turns)):
+                t = make_turn(conv_id, turn_idx)
+                rows.append({"conv_id": conv_id, "turn_idx": turn_idx, "ts": t["ts_us"], **t})
+        return rows
 
-    raw_schema = (
-        "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts_us long"
+    out = map_batches(
+        spark.range(0, n_convs, 1, parallelism), expand,
+        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
     )
-    base = spark.range(0, n_convs, 1, parallelism)
-    df = base.mapInPandas(expand, raw_schema)
-    out = df.withColumn(
-        "ts", F.timestamp_micros(F.col("ts_us"))
-    ).drop("ts_us").select([f.name for f in TRANSCRIPT_SCHEMA.fields])
     if shuffle_rows:
         out = out.repartition(parallelism, F.xxhash64("conv_id", "turn_idx"))
     return out

@@ -11,7 +11,7 @@ Usage (local sandbox):
         [--min-run 3] [--context-limit 4096] \
         [--synthesize N]   # N conversations instead of --input
 
-Pipeline: extraction (the fused mapInPandas stage — HTML/PDF
+Pipeline: extraction (the fused Arrow-batched stage — HTML/PDF
 main-content extraction, clean, chunk, detect, validate) → then
 - prepare: exact conversation dedup → quality gate → packing;
 - curate: (exact ∪ LSH-verified near-dup) dedup → gate → packing;

@@ -7,9 +7,9 @@ Usage (local sandbox):
         --input /path/to/transcripts_parquet --output /path/out \
         --run-id run-1 [--num-partitions 256] [--synthesize N_CONVS]
 
-On a real cluster add executor sizing and (optionally) the Iceberg
-runtime package (see engine/spark/iceberg.py docstring); the job then
-MERGEs into the catalog tables instead of the parquet sink.
+On a real cluster add executor sizing. The job writes the parquet sink
+of engine/spark/job.py; the Iceberg MERGE sink (engine/spark/iceberg.py)
+is not wired yet and waits for the iceberg-spark-runtime jar.
 """
 
 from __future__ import annotations

@@ -208,25 +208,45 @@ def test_checkpoint_resume(spark, transcripts, tmp_path_factory):
     assert again.count() == len(ref_rows)
 
 
+# multi-chunk turns (> 12,000 cleaned chars): the chunker strips each
+# chunk, so a rebuilt span must strip too; U+3000 is whitespace to
+# str.strip() and not to Spark's plain trim
+LONG_TURNS = [
+    "The quick brown fox jumps over the lazy dog. " * 4000,
+    "\u3000".join(f"word{i}" for i in range(6000)),
+    ", , ,, ".join(["alpha beta"] * 3000),
+]
+
+
 def test_narrow_spans_reconstruct_losslessly(spark):
-    """span_content=False + with_span_content == span_content=True,
-    byte-for-byte, on all payload families."""
-    from engine.spark.pipeline import run_extraction, with_span_content
+    """span_content=False + with_span_content == span_content=True ==
+    the kernel's spans, byte-for-byte, on all payload families and on
+    multi-chunk turns."""
+    from engine.spark.pipeline import PY_WHITESPACE, run_extraction, with_span_content
+    from engine.spark.schemas import TRANSCRIPT_SCHEMA
     from engine.spark.transcripts import synthesize_transcripts
 
-    t = synthesize_transcripts(spark, 40, 4)
+    assert set(PY_WHITESPACE) == {chr(c) for c in range(0x110000) if chr(c).isspace()}
+    long = spark.createDataFrame(
+        [(f"long-{i}", 0, "user", text, None, None) for i, text in enumerate(LONG_TURNS)],
+        TRANSCRIPT_SCHEMA,
+    )
+    t = synthesize_transcripts(spark, 40, 4).unionByName(long)
     full = run_extraction(t, num_partitions=8)
     narrow = with_span_content(
         run_extraction(t, num_partitions=8, span_content=False)
     )
 
+    def span_tuples(spans):
+        return [
+            (s["content"], s["index"], s["start_char"], s["end_char"],
+             s["estimated_tokens"])
+            for s in spans
+        ]
+
     def span_map(df):
         return {
-            (r.conv_id, r.turn_idx): [
-                (s["content"], s["index"], s["start_char"], s["end_char"],
-                 s["estimated_tokens"])
-                for s in r.spans
-            ]
+            (r.conv_id, r.turn_idx): span_tuples(r.spans)
             for r in df.select("conv_id", "turn_idx", "spans").collect()
         }
 
@@ -234,6 +254,10 @@ def test_narrow_spans_reconstruct_losslessly(spark):
     assert a.keys() == b.keys() and len(a) > 0
     for k in a:
         assert a[k] == b[k], k
+    for i, text in enumerate(LONG_TURNS):
+        want = span_tuples(extract_turn(text)["spans"])
+        assert len(want) > 1
+        assert b[(f"long-{i}", 0)] == want, i
 
 
 def test_quality_drift_windows(results):
@@ -671,3 +695,53 @@ def test_crash_before_first_slice_rewrites_errors(spark, transcripts, tmp_path_f
     assert first and not first & _part_files(f"{out}/errors")
     got = _errors(spark, out)
     assert len(got) == n_bad and got == _errors(spark, ref)
+
+
+def _far_ts(df):
+    """df with every turn 0 moved outside pandas' nanosecond timestamp
+    range: 2999-12-31 on even conversations, 0001-01-02 on odd ones."""
+    from datetime import datetime, timedelta, timezone
+
+    def us(*ymd):
+        epoch = datetime(1970, 1, 1, tzinfo=timezone.utc)
+        return (datetime(*ymd, tzinfo=timezone.utc) - epoch) // timedelta(microseconds=1)
+
+    even = F.substring("conv_id", -1, 1).cast("int") % 2 == 0
+    far = F.when(even, us(2999, 12, 31)).otherwise(us(1, 1, 2))
+    return df.withColumn(
+        "ts",
+        F.when(F.col("turn_idx") == 0, F.timestamp_micros(far)).otherwise(F.col("ts")),
+    )
+
+
+def _ts_by_key(df):
+    return {
+        (r.conv_id, r.turn_idx): r.us
+        for r in df.select("conv_id", "turn_idx", F.unix_micros("ts").alias("us")).collect()
+    }
+
+
+def test_out_of_pandas_range_ts_passes_through(spark, transcripts, tmp_path_factory):
+    """A turn whose ts pandas cannot hold kills no task: the extraction
+    stage, the checkpointed job (first leg, resume, sink read back) and
+    the LLM hop return every row with its ts unchanged."""
+    from engine.spark.job import run_checkpointed
+    from engine.spark.llm import llm_enrich
+
+    raw = _far_ts(transcripts)
+    want = _ts_by_key(raw)
+    far = {k for k in want if k[1] == 0}
+    assert len({want[k] for k in far}) == 2
+    assert _ts_by_key(run_extraction(raw, num_partitions=8)) == want
+    assert _ts_by_key(run_extraction(raw, num_partitions=8, span_content=False)) == want
+
+    out = str(tmp_path_factory.mktemp("far_ts"))
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_checkpointed(spark, raw, out, num_partitions=8, fail_after_batches=1)
+    first = _ts_by_key(spark.read.parquet(f"{out}/results"))
+    assert first.items() <= want.items()
+    # far rows in both legs: committed by the first, extracted by the resume
+    assert far & first.keys() and far - first.keys()
+    assert _ts_by_key(run_checkpointed(spark, raw, out, num_partitions=8)) == want
+
+    assert _ts_by_key(llm_enrich(run_extraction(raw, num_partitions=8))) == want

@@ -1,5 +1,5 @@
-"""worker_setup: the per-task zipimporter trim every mapInPandas hop
-runs first (engine/spark/stage.py)."""
+"""worker_setup: the per-task zipimporter trim that map_batches, the
+one Python-hop operator, runs first (engine/spark/stage.py)."""
 
 import importlib
 import sys
