@@ -3,8 +3,9 @@
 Every function here is a from-scratch re-derivation of the semantics
 documented in SURVEY.md §2 with file:line citations to the reference.
 No code is copied; behavior is matched so the Spark stage (which calls
-this same module inside a pandas/Arrow UDF) is per-turn equal to the
-oracle by construction and verified by the golden test suite.
+this same module inside its one Arrow-batched hop, ``mapInArrow``) is
+per-turn equal to the oracle by construction and verified by the
+golden test suite.
 """
 
 from engine.kernel.textclean import clean_text, quality_metrics, assess_quality

@@ -7,15 +7,9 @@ Python stdlib covers (zlib, binascii.crc32, struct).
 Scope (honest): 8-bit depth, color types 0 (grayscale), 2 (RGB) and
 6 (RGBA), non-interlaced — the overwhelmingly common web PNG shapes.
 16-bit, palette (3), gray+alpha (4) and Adam7 interlace raise
-ValueError with a precise reason; JPEG/video remain stubbed at the
-multimodal layer. All five scanline filters (None/Sub/Up/Average/
-Paeth) are implemented and tested, including the Paeth predictor's
-exact tie-break order.
-
-The encoder exists to make REAL test fixtures (and the resize sink):
-it emits one IHDR + one IDAT + IEND with a caller-chosen filter type
-applied to every scanline, so the decoder's filter arms are each
-exercised against ground-truth pixels.
+ValueError with a precise reason. All five scanline filters (None/
+Sub/Up/Average/Paeth) are implemented and tested, including the Paeth
+predictor's exact tie-break order.
 """
 
 from __future__ import annotations
@@ -26,20 +20,10 @@ import zlib
 
 _SIG = b"\x89PNG\r\n\x1a\n"
 _CHANNELS = {0: 1, 2: 3, 6: 4}
-_COLOR_TYPE = {1: 0, 3: 2, 4: 6}  # channels -> color type
 # decoded-frame cap shared with engine/kernel/jpeg.py: a header field
 # alone (PNG IHDR, JPEG SOF0) could otherwise make a decoder allocate
 # up to 65535² bytes per plane from a few hundred bytes of input
 MAX_IMAGE_PIXELS = 1 << 24  # 4096 x 4096
-
-
-def _chunk(tag: bytes, data: bytes) -> bytes:
-    return (
-        struct.pack(">I", len(data))
-        + tag
-        + data
-        + struct.pack(">I", binascii.crc32(tag + data) & 0xFFFFFFFF)
-    )
 
 
 def check_frame_size(width: int, height: int) -> None:
@@ -62,61 +46,6 @@ def _paeth(a: int, b: int, c: int) -> int:
     if pb <= pc:
         return b
     return c
-
-
-def encode_png(
-    width: int,
-    height: int,
-    pixels: bytes,
-    channels: int = 1,
-    filter_type: int = 0,
-) -> bytes:
-    """Encode 8-bit pixels (row-major, ``width*height*channels``
-    bytes) as a PNG. ``filter_type`` (0-4) is applied to EVERY
-    scanline — a knob for exercising each decoder filter arm, not an
-    optimizer."""
-    if channels not in _COLOR_TYPE:
-        raise ValueError(f"channels must be 1, 3 or 4, got {channels}")
-    if filter_type not in range(5):
-        raise ValueError(f"filter_type must be 0..4, got {filter_type}")
-    if len(pixels) != width * height * channels:
-        raise ValueError(
-            f"pixel buffer is {len(pixels)} bytes, expected "
-            f"{width * height * channels}"
-        )
-    bpp = channels
-    stride = width * channels
-    raw = bytearray()
-    prev = bytes(stride)
-    for y in range(height):
-        line = pixels[y * stride : (y + 1) * stride]
-        raw.append(filter_type)
-        if filter_type == 0:
-            raw += line
-        else:
-            for x in range(stride):
-                a = line[x - bpp] if x >= bpp else 0
-                b = prev[x]
-                c = prev[x - bpp] if x >= bpp else 0
-                if filter_type == 1:
-                    pred = a
-                elif filter_type == 2:
-                    pred = b
-                elif filter_type == 3:
-                    pred = (a + b) // 2
-                else:
-                    pred = _paeth(a, b, c)
-                raw.append((line[x] - pred) & 0xFF)
-        prev = line
-    ihdr = struct.pack(
-        ">IIBBBBB", width, height, 8, _COLOR_TYPE[channels], 0, 0, 0
-    )
-    return (
-        _SIG
-        + _chunk(b"IHDR", ihdr)
-        + _chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + _chunk(b"IEND", b"")
-    )
 
 
 def decode_png(data: bytes) -> tuple[int, int, int, bytes]:

@@ -83,16 +83,6 @@ def check_currency(value: Any) -> list[str]:
     return [] if str(value).upper() in VALID_CURRENCIES else ["unknown_code"]
 
 
-def validate_invoice_fields(data: dict[str, Any], as_of: date = DEFAULT_AS_OF) -> dict[str, list[str]]:
-    """P4 composite over the extracted invoice fields."""
-    return {
-        "invoice_number": check_invoice_number(data.get("invoice_number")),
-        "invoice_date": check_invoice_date(data.get("invoice_date"), as_of),
-        "total_amount": check_amount(data.get("total_amount")),
-        "currency": check_currency(data.get("currency")),
-    }
-
-
 def scanned_like(
     pages_processed: int,
     total_chars: int,

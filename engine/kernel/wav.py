@@ -61,28 +61,3 @@ def decode_wav(data: bytes) -> dict:
         "peak": int(peak),
         "rms": float(rms),
     }
-
-
-def encode_wav(
-    samples: list[int],
-    sample_rate: int = 16000,
-    channels: int = 1,
-    sample_width: int = 2,
-) -> bytes:
-    """Encode integer PCM samples to a WAV payload — the test-fixture
-    twin of decode_wav (ground-truth parameters in, real container
-    out)."""
-    if sample_width not in _FMT:
-        raise ValueError(f"unsupported sample width {sample_width}")
-    fmt = _FMT[sample_width]
-    if sample_width == 1:
-        frames = bytes((s + 128) & 0xFF for s in samples)
-    else:
-        frames = b"".join(struct.pack(fmt, s) for s in samples)
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(channels)
-        w.setsampwidth(sample_width)
-        w.setframerate(sample_rate)
-        w.writeframes(frames)
-    return buf.getvalue()

@@ -238,8 +238,8 @@ def loop_detect(turns: "DataFrame", min_run: int = 3) -> "DataFrame":
     """
     # every field coalesced: concat_ws SKIPS nulls (a null role would
     # collapse the field count and let '(null, "a\\x1fb")' collide with
-    # '("a", "b")'), and the DuckDB twin / stream_loop_state must see
-    # the identical null→'' mapping
+    # '("a", "b")'), and the DuckDB twin must see the identical
+    # null→'' mapping
     sig = F.md5(
         F.concat_ws(
             "\x1f",

@@ -11,7 +11,7 @@ Design notes (100 TB path):
   partial agg) → band explode → bucket groupBy; candidate pairs only
   ever materialize within a bucket, never the cross product.
 - Near-dup bucket self-joins (MinHash bands, SimHash blocks, embedding
-  sign buckets, multimodal ahash bands) go through _bucketed_pairs and
+  sign buckets) go through _bucketed_pairs and
   its hub-star skew guard. rp_pair_sims stays all-pairs on purpose: its
   output is the pair list, and a star guard there measured dropping 44
   of 199 verified pairs at sf0.01 and 12,715 of 18,968 at sf0.1.
@@ -841,7 +841,6 @@ def decontaminate_batch(
     corpus: "DataFrame",
     eval_docs: "DataFrame",
     n: int = 13,
-    eval_grams: "DataFrame | None" = None,
 ) -> "DataFrame":
     """Training-corpus DECONTAMINATION — drop every training document
     sharing any word ``n``-gram with a held-out evaluation set (the
@@ -860,18 +859,8 @@ def decontaminate_batch(
     if hits ever outgrew the broadcast threshold AQE falls back to a
     shuffled anti-join on doc_id alone. Docs shorter than n words
     carry no n-grams and always survive (both engines agree by
-    construction).
-
-    ``eval_grams`` short-circuits the eval-side derivation with a
-    pre-built distinct-gram table (one ``gram`` column) — callers that
-    check many batches against one fixed eval set (stream_decontaminate)
-    build it once via :func:`eval_ngram_table` and cache it instead of
-    re-aggregating the eval set per call."""
-    ev_grams = (
-        eval_grams
-        if eval_grams is not None
-        else eval_ngram_table(eval_docs, n)
-    )
+    construction)."""
+    ev_grams = _ngrams(eval_docs, n).select("gram").distinct()
     hits = (
         _ngrams(corpus, n)
         .join(F.broadcast(ev_grams), "gram")
@@ -879,14 +868,6 @@ def decontaminate_batch(
         .distinct()
     )
     return corpus.select("doc_id").join(hits, "doc_id", "left_anti")
-
-
-def eval_ngram_table(eval_docs: "DataFrame", n: int = 13) -> "DataFrame":
-    """The broadcastable eval-side artifact of decontaminate_batch: the
-    eval set's distinct word n-grams. Split out so a fixed eval set is
-    aggregated ONCE for many corpus batches (r4 ADVICE: the streaming
-    twin re-derived it per microbatch)."""
-    return _ngrams(eval_docs, n).select("gram").distinct()
 
 
 def decontaminate(
@@ -2455,7 +2436,6 @@ def decontaminate_fuzzy_batch(
     corpus: "DataFrame",
     eval_docs: "DataFrame",
     jaccard_threshold: float = 0.5,
-    eval_bands: "DataFrame | None" = None,
 ) -> "DataFrame":
     """Paraphrase-robust eval-set DECONTAMINATION — drop every training
     document whose MinHash-estimated Jaccard against ANY held-out eval
@@ -2476,14 +2456,8 @@ def decontaminate_fuzzy_batch(
     bounded by |eval ∩ bucket| ≤ LSH_MAX_BUCKET_DOCS (oversized eval
     buckets are degenerate boilerplate; capping them bounds the
     per-corpus-row fanout — connectivity does not matter here because
-    any single surviving hit already drops the doc).
-
-    ``eval_bands`` short-circuits the eval-side derivation with a
-    pre-built capped band table (``eval_id``, ``esig``, ``bucket``) from
-    :func:`eval_band_table` — the streaming caller builds and caches it
-    once for the stream's lifetime instead of re-signing the eval set
-    per microbatch."""
-    eb = eval_bands if eval_bands is not None else eval_band_table(eval_docs)
+    any single surviving hit already drops the doc)."""
+    eb = eval_band_table(eval_docs)
     cb = _minhash_bands(corpus)
     hits = (
         cb.join(F.broadcast(eb), "bucket")
@@ -2501,8 +2475,7 @@ def eval_band_table(eval_docs: "DataFrame") -> "DataFrame":
     """The broadcastable eval-side artifact of decontaminate_fuzzy_batch
     and contamination_report: banded MinHash signatures of the eval
     set (eval_id, esig, bucket) with degenerate (boilerplate) buckets
-    of more than LSH_MAX_BUCKET_DOCS eval docs dropped. Split out so a
-    fixed eval set is signed ONCE for many corpus batches."""
+    of more than LSH_MAX_BUCKET_DOCS eval docs dropped."""
     eb = _minhash_bands(eval_docs).select(
         F.col("doc_id").alias("eval_id"), F.col("sig").alias("esig"), "bucket"
     )
@@ -3196,31 +3169,6 @@ def quality_score_served(
             "score",
             (F.col("score") >= F.lit(threshold)).alias("pred_keep"),
         )
-    )
-
-
-def quality_score_vecs(
-    vecs: "DataFrame",
-    wvec: list[float],
-    threshold: float = 0.5,
-    dim: int = HASH_EMBED_DIM,
-) -> "DataFrame":
-    """quality_score_served with the weights inlined as plan literals —
-    the form a STREAMING sink uses (weights load once driver-side at
-    plan time, no per-batch join). Identical arithmetic: ascending-j
-    left fold over int×double products + bias, floor-round-5 — a
-    parity pytest pins the two forms byte-identical."""
-    warr = F.array(*[F.lit(float(x)) for x in wvec[:dim]])
-    dot = F.aggregate(
-        F.zip_with("w", warr, lambda a, b: a.cast("double") * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    score = _floor_round5(dot + F.lit(float(wvec[dim])))
-    return vecs.select("vec_id", score.alias("score")).select(
-        "vec_id",
-        "score",
-        (F.col("score") >= F.lit(threshold)).alias("pred_keep"),
     )
 
 

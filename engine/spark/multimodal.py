@@ -8,12 +8,11 @@ arm: PNG decodes via the pure-stdlib codec in engine/kernel/png.py
 (zlib inflate + CRC verification + all five scanline filters), JPEG
 via the pure-stdlib baseline codec in engine/kernel/jpeg.py (marker
 parse, Huffman entropy decode, dequant + IDCT, 4:2:0 upsampling,
-restart markers), integer-PCM WAV via engine/kernel/wav.py, and the
-resize path resamples actual decoded pixels; video and compressed
-audio still raise NotImplementedError where an ffmpeg call would go
-on a real cluster. The Spark-side plumbing — schema, partitioning,
-UDF signature, batch shape — is identical in both arms and tested
-(tests/test_multimodal.py).
+restart markers) and integer-PCM WAV via engine/kernel/wav.py; video
+and compressed audio still raise NotImplementedError where an ffmpeg
+call would go on a real cluster. The Spark-side plumbing — schema,
+partitioning, UDF signature, batch shape — is identical in both arms
+and tested (tests/test_multimodal.py).
 
 Synthetic payload format (deterministic, produced by make_media_table):
     b"IMG1" + width:4 bytes BE + height:4 bytes BE + pixel bytes
@@ -24,8 +23,6 @@ from __future__ import annotations
 
 import struct
 from typing import TYPE_CHECKING
-
-from pyspark.sql import functions as F
 
 from engine.spark.stage import map_batches
 
@@ -153,199 +150,4 @@ def extract_media_features(df: "DataFrame", decode_stub: bool = True) -> "DataFr
     return map_batches(
         df.select("media_id", "kind", "payload"), run, FEATURE_SCHEMA,
         keep=("media_id", "kind"),
-    )
-
-
-RESIZE_SCHEMA = (
-    "media_id long, width int, height int, out_width int, out_height int, "
-    "payload binary, ok boolean"
-)
-
-
-def resize_images(
-    df: "DataFrame", out_w: int = 8, out_h: int = 8, decode_stub: bool = True
-) -> "DataFrame":
-    """Image resize over Arrow batches: nearest-neighbor resampling to
-    (out_w, out_h). The resample math (index arithmetic, output
-    assembly) is shared by both arms; the PIXEL SOURCE differs:
-
-    - decode_stub=True (default): the stub codec's view of the body
-      bytes as a row-major w×h grid (cyclic when the body is shorter),
-      emitting a re-headered IMG1 payload;
-    - decode_stub=False: REAL decode (PNG via engine/kernel/png.py,
-      baseline JPEG via engine/kernel/jpeg.py) → per-channel
-      nearest-neighbor over the actual pixel grid → re-encoded PNG
-      payload (the resize SINK is always lossless PNG, whatever the
-      source codec). Undecodable images raise the honest
-      NotImplementedError from _decode_real."""
-
-    def run(batch: "pa.RecordBatch") -> list[dict]:
-        recs = []
-        for media_id, kind, b in zip(*(c.to_pylist() for c in batch.columns)):
-            if kind != "image":
-                continue
-            if not decode_stub:
-                from engine.kernel.png import decode_png, encode_png
-
-                if b[:8] == _PNG_SIG:
-                    w, h, ch, pixels = decode_png(b)
-                elif b[:3] == _JPEG_SIG:
-                    from engine.kernel.jpeg import decode_jpeg
-
-                    w, h, ch, pixels = decode_jpeg(b)
-                else:
-                    _decode_real(b, kind)  # honest raise
-                out_px = bytearray()
-                for y in range(out_h):
-                    sy = (y * h) // out_h
-                    for x in range(out_w):
-                        sx = (x * w) // out_w
-                        base = (sy * w + sx) * ch
-                        out_px += pixels[base : base + ch]
-                recs.append(
-                    {"media_id": media_id, "width": int(w),
-                     "height": int(h), "out_width": out_w,
-                     "out_height": out_h,
-                     "payload": encode_png(
-                         out_w, out_h, bytes(out_px), channels=ch
-                     ),
-                     "ok": True}
-                )
-                continue
-            ok = b[:4] == b"IMG1" and len(b) >= 12
-            if not ok:
-                recs.append(
-                    {"media_id": media_id, "width": None,
-                     "height": None, "out_width": out_w,
-                     "out_height": out_h, "payload": b"", "ok": False}
-                )
-                continue
-            w, h = struct.unpack(">II", b[4:12])
-            body = b[12:] or b"\x00"
-            out = bytearray(b"IMG1" + struct.pack(">II", out_w, out_h))
-            for y in range(out_h):
-                sy = (y * h) // out_h
-                for x in range(out_w):
-                    sx = (x * w) // out_w
-                    out.append(body[(sy * w + sx) % len(body)])
-            recs.append(
-                {"media_id": media_id, "width": int(w),
-                 "height": int(h), "out_width": out_w,
-                 "out_height": out_h, "payload": bytes(out), "ok": True}
-            )
-        return recs
-
-    return map_batches(df.select("media_id", "kind", "payload"), run, RESIZE_SCHEMA)
-
-
-def _ahash64(payload: bytes) -> int | None:
-    """Perceptual average-hash over REAL decoded pixels: grayscale →
-    8×8 nearest-neighbor grid → bit i set iff cell i > grid mean. The
-    classic near-duplicate image signature (uniform brightness shifts
-    preserve it exactly; small local edits flip few bits — which is
-    also what makes it the cross-CODEC dedup key: a PNG and a JPEG
-    re-encode of the same picture land within a few bits). None for
-    payloads the real codecs can't decode."""
-    from engine.kernel.png import decode_png
-
-    try:
-        if payload[:8] == _PNG_SIG:
-            w, h, ch, px = decode_png(payload)
-        elif payload[:3] == _JPEG_SIG:
-            from engine.kernel.jpeg import decode_jpeg
-
-            w, h, ch, px = decode_jpeg(payload)
-        else:
-            return None
-    except ValueError:
-        return None
-    grid = []
-    for y in range(8):
-        sy = (y * h) // 8
-        for x in range(8):
-            sx = (x * w) // 8
-            base = (sy * w + sx) * ch
-            grid.append(sum(px[base : base + ch]) // ch)
-    mean = sum(grid) / 64.0
-    bits = 0
-    for i, v in enumerate(grid):
-        if v > mean:
-            bits |= 1 << i
-    # two's-complement into SIGNED int64: bit 63 set would overflow the
-    # Arrow long column; Spark's bitwiseXOR/bit_count operate on the
-    # raw 64-bit pattern, so the signed view is lossless
-    return bits - (1 << 64) if bits >= (1 << 63) else bits
-
-
-def image_hashes(df: "DataFrame") -> "DataFrame":
-    """(media_id, ahash) for every decodable PNG image — the map-only
-    signature pass image dedup banks on. One Arrow-batched hop; the
-    output is 16 bytes/row no matter how large the images are, so
-    everything downstream (exact groups, banded near-dup joins) runs
-    on a vanishing fraction of the corpus bytes."""
-
-    def run(batch: "pa.RecordBatch") -> list[dict]:
-        recs = []
-        for media_id, kind, payload in zip(*(c.to_pylist() for c in batch.columns)):
-            if kind != "image":
-                continue
-            h = _ahash64(payload)
-            if h is not None:
-                recs.append({"media_id": media_id, "ahash": h})
-        return recs
-
-    return map_batches(
-        df.select("media_id", "kind", "payload"), run, "media_id long, ahash long"
-    )
-
-
-def image_dedup_near(
-    df: "DataFrame", max_hamming: int = 3
-) -> "DataFrame":
-    """Near-duplicate image pairs: banded LSH over the 64-bit ahash —
-    the dedup_simhash pattern applied to pixels. Four 16-bit bands: by
-    pigeonhole, hashes differing in ≤ 3 bits ALWAYS share an intact
-    band (the default is exact recall); ≥ 4 differing bits can split
-    one per band and be missed, so a caller raising max_hamming above
-    3 accepts probabilistic recall, same trade the text simhash
-    documents. Band-equality joins propose candidates and an exact
-    popcount(xor) verifies — never an all-pairs comparison. The pairs
-    come from _hamming_pairs, the operator dedup_simhash also uses: a
-    bucket of more than LSH_MAX_BUCKET_DOCS images (a corpus of
-    identical blank images) pairs as a star around its min media_id,
-    O(bucket) pairs with the same connected components, exactly like
-    simhash's boilerplate case.
-
-    Emits verified pairs (media_id_a < media_id_b, hamming)."""
-    from engine.spark.analytics import _hamming_pairs
-
-    hashes = image_hashes(df).select(F.col("media_id").alias("doc_id"), "ahash")
-    return _hamming_pairs(hashes, "ahash", 16, 4, max_hamming).select(
-        F.col("doc_a").alias("media_id_a"),
-        F.col("doc_b").alias("media_id_b"),
-        "hamming",
-    )
-
-
-def frame_sample(df: "DataFrame", every_n: int = 32) -> "DataFrame":
-    """Frame-sampling plumbing: explode fixed-stride byte offsets per
-    media row (native sequence/explode — the real variant would slice
-    decoded frames at these offsets in the same shape)."""
-    return df.select(
-        "media_id",
-        "kind",
-        "payload",
-        F.length("payload").alias("n_bytes"),
-        F.explode(
-            F.sequence(F.lit(0), F.length("payload") - 1, F.lit(every_n))
-        ).alias("offset"),
-    ).select(
-        "media_id",
-        "kind",
-        "n_bytes",
-        "offset",
-        # byte at offset, natively: 1-byte binary slice → hex → int
-        F.conv(F.hex(F.expr("substring(payload, offset + 1, 1)")), 16, 10)
-        .cast("int")
-        .alias("sample_byte"),
     )

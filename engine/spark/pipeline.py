@@ -86,57 +86,10 @@ def with_stable_order(df: "DataFrame") -> "DataFrame":
     Scale bound: the window sorts each conversation on ONE task, so a
     10^8-turn mega-thread pins that task. Fine for every current
     consumer (extraction doesn't need turn_seq; frame consumers are
-    block-bounded). For whole-corpus ordered exports or turn_seq over
-    unbounded conversations, use with_stable_order_blocked /
-    ordered_export below — same output, bounded task memory."""
+    block-bounded). For whole-corpus ordered exports use ordered_export
+    below: the same order with bounded task memory."""
     w = Window.partitionBy("conv_id").orderBy("turn_idx", "ts")
     return df.withColumn("turn_seq", F.row_number().over(w))
-
-
-def with_stable_order_blocked(
-    df: "DataFrame", block: int = SKEW_BLOCK
-) -> "DataFrame":
-    """with_stable_order with bounded per-task state: exact same
-    turn_seq, but no task ever sorts more than one ``block`` of a
-    conversation.
-
-    Two-phase row_number: (1) per-(conv, turn_block) counts — a tiny
-    table, one row per block; (2) a running offset per conversation
-    over those block rows (window over ≤ turns/block rows, not turns);
-    (3) intra-block row_number (window partitioned by (conv, block) —
-    each partition ≤ ~block rows); turn_seq = block offset + intra
-    rank. A 10^8-turn mega-thread becomes 10^4 bounded sorts plus a
-    10^4-row window instead of one 10^8-row sort on a single task."""
-    # NULL turn_idx must flow through: the block join below is
-    # null-UNSAFE equality, so a NULL _blk row would silently vanish
-    # while with_stable_order's window keeps it (nulls first). Coalesce
-    # to long-min — it sorts before every real block, exactly the
-    # window's nulls-first position (round-4 review fix).
-    blk = F.coalesce(
-        (F.col("turn_idx") / F.lit(block)).cast("long"),
-        F.lit(-(2**63)).cast("long"),
-    ).alias("_blk")
-    marked = df.withColumn("_blk", blk)
-    counts = marked.groupBy("conv_id", "_blk").agg(
-        F.count("*").alias("_blk_n")
-    )
-    w_blocks = (
-        Window.partitionBy("conv_id")
-        .orderBy("_blk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.withColumn(
-        "_blk_off", F.coalesce(F.sum("_blk_n").over(w_blocks), F.lit(0))
-    ).select("conv_id", "_blk", "_blk_off")
-    w_intra = Window.partitionBy("conv_id", "_blk").orderBy("turn_idx", "ts")
-    return (
-        marked.join(offsets, ["conv_id", "_blk"])
-        .withColumn(
-            "turn_seq",
-            (F.col("_blk_off") + F.row_number().over(w_intra)).cast("int"),
-        )
-        .drop("_blk", "_blk_off")
-    )
 
 
 def ordered_export(

@@ -245,6 +245,39 @@ def test_dedup_embedding_cosine_planted_hub(spark, tmp_path):
     assert kept == expected
 
 
+def test_hamming_pairs_planted_hub(spark):
+    """70 identical 60-bit hashes (> LSH_MAX_BUCKET_DOCS) share every
+    band bucket, banded the way dedup_simhash bands them: the guarded
+    join pairs them as a star around the min doc_id (N-1 pairs, not
+    N(N-1)/2) with the same connected components, while a 2-doc bucket
+    still pairs all-pairs."""
+    from engine.spark.analytics import (
+        LSH_MAX_BUCKET_DOCS,
+        SIMHASH_BITS,
+        _hamming_pairs,
+        dedup_clusters,
+    )
+
+    n_hub, band_bits = 70, 10
+    assert n_hub > LSH_MAX_BUCKET_DOCS
+    hub_ids = list(range(100, 100 + n_hub))
+    # the two hashes differ in every 10-bit band: no shared bucket
+    rows = [(i, 0x123456789ABCDEF) for i in hub_ids]
+    rows += [(i, 0xFEDCBA987654321) for i in (0, 1)]
+    hashes = spark.createDataFrame(rows, "doc_id long, simhash long")
+    pairs_df = _hamming_pairs(
+        hashes, "simhash", band_bits, SIMHASH_BITS // band_bits, 6
+    )
+    pairs = {(r.doc_a, r.doc_b): r.hamming for r in pairs_df.collect()}
+    assert set(pairs) == {(100, m) for m in hub_ids[1:]} | {(0, 1)}
+    assert set(pairs.values()) == {0}
+    clusters = {
+        r.doc_id: r.cluster_id
+        for r in dedup_clusters(pairs_df.select("doc_a", "doc_b")).collect()
+    }
+    assert clusters == {**{i: 100 for i in hub_ids}, 0: 0, 1: 0}
+
+
 def test_adaptive_n_centroids_scales():
     from engine.spark.analytics import adaptive_n_centroids
 

@@ -11,7 +11,8 @@ import struct
 
 import pytest
 
-from engine.kernel.jpeg import ZIGZAG, decode_jpeg, encode_jpeg
+from codec_fixtures import encode_jpeg
+from engine.kernel.jpeg import ZIGZAG, _clamp, decode_jpeg
 
 
 def _luma_gradient(w: int, h: int) -> bytes:
@@ -179,7 +180,7 @@ def _with_segment_body(blob: bytes, marker: int, body: bytes) -> bytes:
 def test_truncated_segment_bodies_named(marker, keep, name):
     """A well-framed segment whose body is too short for its fields
     raises ValueError naming the segment, not IndexError/struct.error
-    (image_hashes catches only ValueError)."""
+    (ValueError is the decoders' one error type)."""
     blob = encode_jpeg(16, 16, _luma_gradient(16, 16), quality=80, restart_interval=2)
     i = blob.index(bytes([0xFF, marker]))
     body = blob[i + 4 : i + 4 + keep]
@@ -211,22 +212,10 @@ def test_every_truncation_raises_valueerror():
             decode_jpeg(blob[:cut])
 
 
-def test_ahash_of_corrupt_jpeg_is_none():
-    from engine.spark.multimodal import _ahash64
-
-    blob = encode_jpeg(16, 16, _luma_gradient(16, 16), quality=80, restart_interval=2)
-    assert _ahash64(blob) is not None
-    for marker in (0xC0, 0xDD, 0xDA):
-        assert _ahash64(_with_segment_body(blob, marker, b"")) is None
-
-
 def test_oversized_sof0_rejected_before_allocation():
     """A SOF0 declaring 65535x65535 is refused by the shared
-    MAX_IMAGE_PIXELS cap before any component plane is allocated, and
-    image hashing maps it to None."""
+    MAX_IMAGE_PIXELS cap before any component plane is allocated."""
     import time
-
-    from engine.spark.multimodal import _ahash64
 
     blob = encode_jpeg(16, 16, _luma_gradient(16, 16), quality=80)
     i = blob.index(b"\xff\xc0")
@@ -236,5 +225,13 @@ def test_oversized_sof0_rejected_before_allocation():
     t0 = time.perf_counter()
     with pytest.raises(ValueError, match="MAX_IMAGE_PIXELS"):
         decode_jpeg(huge)
-    assert _ahash64(huge) is None
     assert time.perf_counter() - t0 < 1.0
+
+
+def test_clamp_rounds_to_nearest():
+    """Decoded samples round to nearest, as libjpeg does, instead of
+    truncating toward zero (a systematic -0.5 bias)."""
+    assert [_clamp(v) for v in (127.6, 127.4, 127.5, 254.6, 0.4)] == [
+        128, 127, 128, 255, 0,
+    ]
+    assert _clamp(-3.2) == 0 and _clamp(300.0) == 255

@@ -7,7 +7,8 @@ import zlib
 
 import pytest
 
-from engine.kernel.png import decode_png, encode_png
+from codec_fixtures import encode_png
+from engine.kernel.png import decode_png
 
 
 def _pixels(w: int, h: int, ch: int) -> bytes:
@@ -124,19 +125,17 @@ def _png(ihdr: bytes, idat: bytes) -> bytes:
 
 def test_oversized_ihdr_rejected_before_allocation():
     """A 65535x65535 IHDR is refused by the shared MAX_IMAGE_PIXELS cap
-    on the header alone, and image hashing maps it to None; a frame at
-    the cap passes the size check and fails on its stream instead."""
+    on the header alone; a frame at the cap passes the size check and
+    fails on its stream instead."""
     import time
 
     from engine.kernel.png import MAX_IMAGE_PIXELS
-    from engine.spark.multimodal import _ahash64
 
     idat = zlib.compress(b"\x00" * 64)
     huge = _png(struct.pack(">IIBBBBB", 65535, 65535, 8, 0, 0, 0, 0), idat)
     t0 = time.perf_counter()
     with pytest.raises(ValueError, match="MAX_IMAGE_PIXELS"):
         decode_png(huge)
-    assert _ahash64(huge) is None
     assert time.perf_counter() - t0 < 1.0
     at_cap = _png(struct.pack(">IIBBBBB", MAX_IMAGE_PIXELS // 4096, 4096, 8, 0, 0, 0, 0), idat)
     with pytest.raises(ValueError, match="decompressed stream"):
@@ -146,8 +145,7 @@ def test_oversized_ihdr_rejected_before_allocation():
 def test_idat_inflate_bounded_and_corrupt_stream_is_valueerror():
     """IDAT inflates only as far as IHDR declares (a 16 MB zlib bomb
     behind a 4x4 header stops at 21 bytes), and truncated or corrupt
-    deflate data raises ValueError, the one exception image hashing
-    catches."""
+    deflate data raises ValueError, the decoders' one error type."""
     ihdr = struct.pack(">IIBBBBB", 4, 4, 8, 0, 0, 0, 0)
     with pytest.raises(ValueError, match="21\\+ bytes, expected 20"):
         decode_png(_png(ihdr, zlib.compress(b"\x00" * (16 << 20))))

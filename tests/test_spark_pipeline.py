@@ -354,27 +354,6 @@ def test_partitioned_sink_prunes_on_part_id(spark, transcripts, tmp_path_factory
     assert one.select("part_id").distinct().collect()[0][0] == 3
 
 
-def test_blocked_stable_order_matches_window(spark):
-    """with_stable_order_blocked must equal with_stable_order exactly —
-    tiny block size forces the multi-block path, shuffled input and
-    duplicate ts included."""
-    from engine.spark.pipeline import with_stable_order_blocked
-
-    t = synthesize_transcripts(spark, 10, 6, parallelism=3, shuffle_rows=True)
-    want = {
-        (r.conv_id, r.turn_idx): r.turn_seq
-        for r in with_stable_order(t).collect()
-    }
-    got = {
-        (r.conv_id, r.turn_idx): r.turn_seq
-        for r in with_stable_order_blocked(t, block=4).collect()
-    }
-    assert got == want
-    # schema parity: same columns, same order
-    assert with_stable_order_blocked(t, block=4).columns == \
-        with_stable_order(t).columns
-
-
 def test_ordered_export_global_file_order(spark, tmp_path_factory):
     """ordered_export: part files read in NAME order yield the full
     (conv_id, turn_idx, ts) global order; no rows lost or duplicated;
@@ -414,39 +393,6 @@ def test_ordered_export_global_file_order(spark, tmp_path_factory):
     # the mega thread split across >1 file and no file owns it all
     assert sum(1 for c in per_file_mega if c > 0) > 1
     assert max(per_file_mega) < mega_total
-
-
-def test_blocked_stable_order_keeps_null_turn_idx(spark):
-    """Round-4 review fix pinned: a NULL turn_idx row must flow through
-    with_stable_order_blocked (the block join is null-unsafe equality,
-    so an uncoalesced NULL _blk silently dropped the row) and take the
-    same nulls-first turn_seq the window path assigns."""
-    import datetime as dt
-
-    from engine.spark.pipeline import with_stable_order_blocked
-
-    t0 = dt.datetime(2026, 1, 1)
-    rows = [
-        ("c1", None, "u", "x", None, t0),
-        ("c1", 0, "u", "y", None, t0),
-        ("c1", 1, "a", "z", None, t0),
-        ("c2", 5, "u", "w", None, t0),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts timestamp",
-    )
-    want = {
-        (r.conv_id, r.turn_idx): r.turn_seq
-        for r in with_stable_order(df).collect()
-    }
-    got = {
-        (r.conv_id, r.turn_idx): r.turn_seq
-        for r in with_stable_order_blocked(df, block=2).collect()
-    }
-    assert got == want
-    assert got[("c1", None)] == 1  # nulls first, like the window
 
 
 METRICS_DDL = (

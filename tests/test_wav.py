@@ -6,7 +6,8 @@ import math
 
 import pytest
 
-from engine.kernel.wav import decode_wav, encode_wav
+from codec_fixtures import encode_wav
+from engine.kernel.wav import decode_wav
 
 
 def test_roundtrip_16bit():
