@@ -10,9 +10,15 @@ rounded identically so the order-insensitive value-hash is FP-stable.
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -43,8 +49,6 @@ def entry(spark: SparkSession) -> DataFrame:
 def _ex(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Extraction over document-derived transcripts (shared by the
     extraction queries below; deterministic, no LLM)."""
-    from pyspark.sql import functions as F
-
     from engine.spark.pipeline import run_extraction
     from engine.spark.transcripts import transcripts_from_documents
 
@@ -52,148 +56,273 @@ def _ex(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_extraction(t, num_partitions=32)
 
 
-def _per_turn_path(sf_dir: str) -> str:
+# ---- fixture layer -------------------------------------------------
+# Artifacts: tables an entry materializes so its DuckDB twin recomputes
+# the result from exactly the rows the Spark side read. Every input is
+# deterministic, so each is built at first call per process and reused.
+
+_ARTIFACTS: set[str] = set()
+
+
+def _pid_path(stem: str) -> str:
     # keyed by pid so concurrent sessions (bench + pytest) can't
-    # overwrite the parquet while the other's DuckDB oracle reads it;
+    # overwrite an artifact while the other's DuckDB oracle reads it;
     # queries() and oracle_sql() run in one process, so both sides of a
-    # comparison always derive the same path. Cleaned up at process
-    # exit — pid keying otherwise leaks one parquet dir per run.
-    import atexit
-    import os
-    import shutil
-    import tempfile
+    # comparison always derive the same path
+    return os.path.join(tempfile.gettempdir(), f"{stem}_{os.getpid()}")
 
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"entry_per_turn_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    if path not in _TMP_PATHS:
-        _TMP_PATHS.add(path)
-        for p in (path, path + "_spans", path + "_cb"):
-            atexit.register(shutil.rmtree, p, ignore_errors=True)
+
+def _per_turn_path(sf_dir: str) -> str:
+    return _pid_path(f"entry_per_turn_{os.path.basename(sf_dir.rstrip('/'))}")
+
+
+def _sft_synth_path() -> str:
+    return _pid_path("entry_sft_synth")
+
+
+def _agent_synth_path() -> str:
+    return _pid_path("entry_agent_synth")
+
+
+def _inv_synth_path() -> str:
+    return _pid_path("entry_inv_synth")
+
+
+def _artifact(path: str, build: Callable[[str], object]) -> str:
+    """Run ``build(path)`` at most once per process path. The memo is
+    recorded only after ``build`` returns, so a failed build leaves no
+    memo (and no partial directory) and the next call rebuilds. Built
+    artifacts are removed at process exit — pid keying otherwise leaks
+    one directory per run."""
+    if path not in _ARTIFACTS:
+        try:
+            build(path)
+        except BaseException:
+            shutil.rmtree(path, ignore_errors=True)
+            raise
+        atexit.register(shutil.rmtree, path, ignore_errors=True)
+        _ARTIFACTS.add(path)
     return path
-
-
-_TMP_PATHS: set[str] = set()
-# memoized adaptive hyperplane plans keyed by vector-artifact path:
-# (path, sign_dims, probes) — see _rp_plan
-_RP_PLANS: dict[str, tuple[str, int, int]] = {}
 
 
 def _per_turn_parquet(
     spark: SparkSession, sf_dir: str, df: DataFrame | None = None
 ) -> str:
-    """Materialize per-turn extraction scalars to a deterministic local
-    parquet (written eagerly when the query is invoked, before the
-    oracle runs) so DuckDB can recompute corpus rollups from exactly
-    the rows the Spark side aggregated. Extraction is deterministic, so
-    repeated writes are byte-stable in content."""
-    path = _per_turn_path(sf_dir)
-    (df if df is not None else _ex(spark, sf_dir)).select(
-        "conv_id", "turn_idx", "ts", "bytes_in", "is_empty",
-        "estimated_tokens", "quality_score", "quality_bucket",
-        "overall_confidence", "n_chunks",
-    ).write.mode("overwrite").parquet(path)
-    return path
+    """Per-turn extraction scalars, so DuckDB recomputes corpus rollups
+    from exactly the rows the Spark side aggregated."""
+    return _artifact(
+        _per_turn_path(sf_dir),
+        lambda p: (df if df is not None else _ex(spark, sf_dir)).select(
+            "conv_id", "turn_idx", "ts", "bytes_in", "is_empty",
+            "estimated_tokens", "quality_score", "quality_bucket",
+            "overall_confidence", "n_chunks",
+        ).write.mode("overwrite").parquet(p),
+    )
 
 
-def _spans_parquet(
-    spark: SparkSession, sf_dir: str, df: DataFrame | None = None
-) -> str:
-    """Materialize the posexplode span transport (the extract_spans
-    projection) so DuckDB can cross-check it against the scalar-path
+def _spans_parquet(sf_dir: str, df: DataFrame) -> str:
+    """The posexplode span transport (the extract_spans projection) of
+    ``df``, so DuckDB can cross-check it against the scalar-path
     per-turn parquet — the two are independent projections of the same
     kernel output, so a drift in span explosion/transport shows up as
     count mismatches in extract_spans_consistency."""
-    path = _per_turn_path(sf_dir) + "_spans"
-    from pyspark.sql import functions as F
-
-    if df is None:
-        df = _ex(spark, sf_dir)
-    df.select(
-        "conv_id", "turn_idx", F.posexplode_outer("spans").alias("pos", "span")
-    ).select(
-        "conv_id", "turn_idx", "pos",
-        F.col("span.estimated_tokens").alias("span_tokens"),
-    ).write.mode("overwrite").parquet(path)
-    return path
+    return _artifact(
+        _per_turn_path(sf_dir) + "_spans",
+        lambda p: df.select(
+            "conv_id", "turn_idx",
+            F.posexplode_outer("spans").alias("pos", "span"),
+        ).select(
+            "conv_id", "turn_idx", "pos",
+            F.col("span.estimated_tokens").alias("span_tokens"),
+        ).write.mode("overwrite").parquet(p),
+    )
 
 
 def _conv_text_parquet(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize (conv_id, turn_idx, cleaned_text) from the
-    deterministic extraction so DuckDB can recompute the conversation
-    fingerprints (per-turn md5 → block hash → conv hash) from exactly
-    the rows the Spark side consumed."""
-    path = _per_turn_path(sf_dir) + "_dc"
-    import atexit
-    import shutil
-
-    if path not in _TMP_PATHS:
-        _TMP_PATHS.add(path)
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-    _ex(spark, sf_dir).select("conv_id", "turn_idx", "cleaned_text").write.mode(
-        "overwrite"
-    ).parquet(path)
-    return path
+    """(conv_id, turn_idx, cleaned_text) from the document extraction,
+    so DuckDB recomputes the conversation fingerprints (per-turn md5 →
+    block hash → conv hash) from exactly the rows the Spark side
+    consumed."""
+    return _artifact(
+        _per_turn_path(sf_dir) + "_dc",
+        lambda p: _ex(spark, sf_dir).select(
+            "conv_id", "turn_idx", "cleaned_text"
+        ).write.mode("overwrite").parquet(p),
+    )
 
 
 def _sft_turns_parquet(spark: SparkSession) -> str:
-    """Materialize (conv_id, turn_idx, role, cleaned_text) from the
-    synthetic multi-turn transcripts (the document-derived conversations
-    are single-turn all-user, which would leave sft_examples with zero
-    targets) so DuckDB can recompute the context-window math from the
-    same rows. SF-independent; pid-keyed like the other materializers."""
-    import atexit
-    import shutil
-
+    """(conv_id, turn_idx, role, cleaned_text) from the synthetic
+    multi-turn transcripts (the document-derived conversations are
+    single-turn all-user, which would leave sft_examples with zero
+    targets). SF-independent."""
     from engine.spark.pipeline import run_extraction
     from engine.spark.transcripts import synthesize_transcripts
 
-    path = _sft_synth_path()
-    if path not in _TMP_PATHS:
-        # write-once per pid: the input is deterministic, and several
-        # entries share it — re-running extraction per call would
-        # multiply the materialization cost per pass. The memo is
-        # recorded only AFTER the write succeeds, so a transient
-        # failure doesn't poison every later call with a missing file.
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-        t = synthesize_transcripts(spark, 120, 4)
-        run_extraction(t, num_partitions=32).select(
-            "conv_id", "turn_idx", "role", "cleaned_text"
-        ).write.mode("overwrite").parquet(path)
-        _TMP_PATHS.add(path)
-    return path
-
-
-def _sft_synth_path() -> str:
-    import os
-    import tempfile
-
-    return os.path.join(tempfile.gettempdir(), f"entry_sft_synth_{os.getpid()}")
+    return _artifact(
+        _sft_synth_path(),
+        lambda p: run_extraction(
+            synthesize_transcripts(spark, 120, 4), num_partitions=32
+        ).select("conv_id", "turn_idx", "role", "cleaned_text")
+        .write.mode("overwrite").parquet(p),
+    )
 
 
 def _agent_turns_parquet(spark: SparkSession) -> str:
-    """Materialize the raw synthetic transcript turns (conv_id,
-    turn_idx, role, text, tool, ts) so DuckDB can recompute the
-    agent-trajectory analytics (tool stats / transitions / timing /
-    well-formedness) from exactly the rows the Spark side consumes.
-    SF-independent (pure synthesis); pid-keyed like the others."""
-    import atexit
-    import shutil
-
+    """The raw synthetic transcript turns (conv_id, turn_idx, role,
+    text, tool, ts) the agent-trajectory analytics (tool stats /
+    transitions / timing / well-formedness) read. SF-independent."""
     from engine.spark.transcripts import synthesize_transcripts
 
-    path = _agent_synth_path()
-    if path not in _TMP_PATHS:
-        # memo recorded only AFTER a successful write (see
-        # _sft_turns_parquet for why)
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-        synthesize_transcripts(spark, 120, 4).write.mode(
-            "overwrite"
-        ).parquet(path)
-        _TMP_PATHS.add(path)
-    return path
+    return _artifact(
+        _agent_synth_path(),
+        lambda p: synthesize_transcripts(spark, 120, 4)
+        .write.mode("overwrite").parquet(p),
+    )
 
+
+def _inv_fields_parquet(spark: SparkSession) -> str:
+    """The kernel-extracted invoice fields (doc_type + fields_json per
+    invoice turn of the synthetic transcripts), so DuckDB recomputes
+    the P4 validation predicates from exactly the rows the native
+    expressions consume. SF-independent."""
+    from engine.spark.pipeline import run_extraction
+    from engine.spark.transcripts import synthesize_transcripts
+
+    return _artifact(
+        _inv_synth_path(),
+        lambda p: run_extraction(
+            synthesize_transcripts(spark, 120, 4), num_partitions=32
+        ).filter(F.col("doc_type") == "invoice")
+        .select("conv_id", "turn_idx", "doc_type", "fields_json")
+        .write.mode("overwrite").parquet(p),
+    )
+
+
+def _codebook_parquet(spark: SparkSession, sf_dir: str) -> str:
+    """The trained k-means codebook, shared by the IVF search and the
+    cluster-composition entries."""
+    from engine.spark import analytics as A
+
+    return _artifact(
+        _per_turn_path(sf_dir) + "_cb",
+        lambda p: A.train_ivf_codebook(spark, sf_dir)
+        .write.mode("overwrite").parquet(p),
+    )
+
+
+def _hash_vectors_parquet(spark: SparkSession, sf_dir: str) -> str:
+    """The nonzero hash-embed unit vectors the adaptive semantic-dedup
+    entries, the quality classifier and their DuckDB twins read (the
+    data-dependent embedding becomes a common table, so a twin can
+    derive the adaptive sign width itself in SQL)."""
+    from engine.spark import analytics as A
+
+    return _artifact(
+        _per_turn_path(sf_dir) + "_hv",
+        lambda p: A.hash_embed_vectors(
+            spark.read.parquet(f"{sf_dir}/documents.parquet")
+        ).write.mode("overwrite").parquet(p),
+    )
+
+
+def _rp_plan(spark: SparkSession, sf_dir: str) -> tuple[str, int, int]:
+    """The shared adaptive random-hyperplane plan: (sign_dims, probes)
+    from rp_lsh_params over the vector artifact's row count, persisted
+    next to the vectors so any DuckDB twin replays it exactly
+    (transcendentals stay driver-side; the cross-engine contract is
+    md5 + IEEE arithmetic only). Returns (vectors_path, sign_dims,
+    probes); after the first call the plan is read back driver-side,
+    so a bench best-of-K pays no Spark job per timed iteration."""
+    import pyarrow.parquet as pq
+
+    from engine.spark import analytics as A
+
+    path = _hash_vectors_parquet(spark, sf_dir)
+
+    def build(prm: str) -> None:
+        n = spark.read.parquet(path).count()
+        sign_dims, probes = A.rp_lsh_params(n, threshold=0.9)
+        spark.createDataFrame(
+            [(n, sign_dims, probes)], "n long, sign_dims int, probes int"
+        ).coalesce(1).write.mode("overwrite").parquet(prm)
+
+    plan = pq.read_table(_artifact(path + "_prm", build)).to_pylist()[0]
+    return path, plan["sign_dims"], plan["probes"]
+
+
+def _quality_weights_parquet(spark: SparkSession, sf_dir: str) -> str:
+    """The distilled quality classifier's weight vector (one row,
+    array<double> of dim+1) — the served-model artifact the scoring
+    entry and its DuckDB twin both read. Labels distill the c4_clean
+    document gate (keep_doc): the classic pipeline move of replacing a
+    rule cascade with one dense scorer. Training is exact-integer Gram
+    aggregation + a driver-side 65×65 ridge solve (plan-time, outside
+    the cross-engine contract — only the persisted weights are
+    replayed)."""
+    from engine.spark import analytics as A
+
+    hv = _hash_vectors_parquet(spark, sf_dir)
+
+    def build(p: str) -> None:
+        vecs = spark.read.parquet(hv)
+        labels = (
+            A.c4_clean(spark, sf_dir)
+            .select(
+                F.col("doc_id").alias("vec_id"),
+                F.col("keep_doc").cast("int").alias("label"),
+            )
+            .join(vecs.select("vec_id"), "vec_id")
+        )
+        spark.createDataFrame(
+            [(A.quality_train(vecs, labels),)], "wvec array<double>"
+        ).coalesce(1).write.mode("overwrite").parquet(p)
+
+    return _artifact(_per_turn_path(sf_dir) + "_qw", build)
+
+
+# Planted fixtures: the generated corpus lacks the case a gate or a
+# dedup arm exists for, so both engines add it to the same ~1/16 of
+# conversations, picked by the first hex digit of md5(conv_id).
+
+
+def _picked(digit: str) -> Column:
+    return F.substring(F.md5("conv_id"), 1, 1) == digit
+
+
+def _copy(src: DataFrame, suffix: str, **replace: Column) -> DataFrame:
+    """``src``'s md5-prefix-'0' conversations re-keyed as conv_id +
+    ``suffix`` ('~' sorts after alphanumerics, so the original stays
+    the dedup keeper), with the columns named in ``replace`` swapped
+    for the given expressions."""
+    return src.filter(_picked("0")).select(
+        F.concat("conv_id", F.lit(suffix)).alias("conv_id"),
+        *[replace.get(c, F.col(c)).alias(c)
+          for c in src.columns if c != "conv_id"],
+    )
+
+
+def _plant(
+    src: DataFrame, digit: str, rows: list[tuple[int, str, str, str]]
+) -> DataFrame:
+    """``src`` plus one (turn_idx, role, text, ts) turn per entry of
+    ``rows``, with a null tool, in every conversation ``digit`` picks."""
+    convs = src.filter(_picked(digit)).select("conv_id").distinct()
+    return reduce(DataFrame.unionByName, [
+        convs.select(
+            "conv_id",
+            F.lit(idx).cast("int").alias("turn_idx"),
+            F.lit(role).alias("role"),
+            F.lit(text).alias("text"),
+            F.lit(None).cast("string").alias("tool"),
+            F.lit(ts).cast("timestamp").alias("ts"),
+        )
+        for idx, role, text, ts in rows
+    ], src)
+
+
+# ts of every planted turn but turn_integrity's
+_TS0 = "2025-01-01 00:00:00"
 
 # canned template text both engines plant for canned_responses —
 # ASCII-only so substring/substr previews agree byte-for-byte
@@ -223,15 +352,6 @@ _ECHO_USER_TEXT = (
 _ECHO_ASSISTANT_TEXT = (
     "the quarterly revenue figures for the north region as requested"
 )
-
-
-def _agent_synth_path() -> str:
-    import os
-    import tempfile
-
-    return os.path.join(
-        tempfile.gettempdir(), f"entry_agent_synth_{os.getpid()}"
-    )
 
 
 def _bpe_oracle(n_merges: int, vocab_cap: int) -> str:
@@ -341,63 +461,6 @@ def _bpe_ctes(n_merges: int, vocab_cap: int) -> list:
     return ctes
 
 
-def _inv_fields_parquet(spark: SparkSession) -> str:
-    """Materialize the kernel-extracted invoice fields (doc_type +
-    fields_json per invoice turn, over the deterministic synthetic
-    transcripts) so DuckDB can recompute the P4 validation predicates
-    from exactly the rows the native expressions consume. SF-independent
-    (the input is synthesized, not read from the sf tables), so one
-    pid-keyed path serves every scale's comparison."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from engine.spark.pipeline import run_extraction
-    from engine.spark.transcripts import synthesize_transcripts
-
-    path = _inv_synth_path()
-    if path not in _TMP_PATHS:
-        _TMP_PATHS.add(path)
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-    t = synthesize_transcripts(spark, 120, 4)
-    run_extraction(t, num_partitions=32).filter(
-        F.col("doc_type") == "invoice"
-    ).select("conv_id", "turn_idx", "doc_type", "fields_json").write.mode(
-        "overwrite"
-    ).parquet(path)
-    return path
-
-
-def _inv_synth_path() -> str:
-    import os
-    import tempfile
-
-    return os.path.join(tempfile.gettempdir(), f"entry_inv_synth_{os.getpid()}")
-
-
-def _codebook_parquet(spark: SparkSession, sf_dir: str) -> str:
-    """Train + persist the k-means codebook once per (pid, sf_dir) —
-    shared by the IVF search and the cluster-composition entries, which
-    previously each retrained the identical deterministic codebook.
-    Memo recorded only after the write succeeds."""
-    import atexit
-    import shutil
-
-    from engine.spark import analytics as A
-
-    path = _per_turn_path(sf_dir) + "_cb"
-    if path not in _TMP_PATHS:
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-        A.train_ivf_codebook(spark, sf_dir).write.mode("overwrite").parquet(
-            path
-        )
-        _TMP_PATHS.add(path)
-    return path
-
-
 def _simsearch_ivf_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Centroid-IVF in its serving shape: train the k-means codebook
     once (deterministic), persist it as a parquet table, and search
@@ -421,57 +484,6 @@ def _embedding_clusters_served(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cb = A.load_ivf_codebook(spark, _codebook_parquet(spark, sf_dir))
     return A.embedding_clusters(spark, sf_dir, cb)
-
-
-def _hash_vectors_parquet(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the nonzero hash-embed unit vectors once per
-    (pid, sf_dir) — the shared artifact the adaptive semantic-dedup
-    entry and its DuckDB twin both read (the _codebook_parquet
-    pattern: the data-dependent embedding becomes a common table, so
-    the twin can derive the adaptive sign width itself in SQL)."""
-    import atexit
-    import shutil
-
-    from engine.spark import analytics as A
-
-    path = _per_turn_path(sf_dir) + "_hv"
-    if path not in _TMP_PATHS:
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-        A.hash_embed_vectors(
-            spark.read.parquet(f"{sf_dir}/documents.parquet")
-        ).write.mode("overwrite").parquet(path)
-        _TMP_PATHS.add(path)
-    return path
-
-
-def _rp_plan(spark: SparkSession, sf_dir: str) -> tuple[str, int, int]:
-    """The shared adaptive random-hyperplane plan: materialize the
-    vector artifact, derive (sign_dims, probes) from rp_lsh_params,
-    and persist the chosen plan next to the vectors so any DuckDB twin
-    replays it exactly (transcendentals stay driver-side; the
-    cross-engine contract is md5 + IEEE arithmetic only). Returns
-    (vectors_path, sign_dims, probes). Memoized per (pid, sf_dir): a
-    bench best-of-K must not pay a redundant count() job per timed
-    iteration (round-5 review finding)."""
-    import atexit
-    import shutil
-
-    from engine.spark import analytics as A
-
-    path = _hash_vectors_parquet(spark, sf_dir)
-    if path in _RP_PLANS:
-        return _RP_PLANS[path]
-    n = spark.read.parquet(path).count()
-    sign_dims, probes = A.rp_lsh_params(n, threshold=0.9)
-    prm = path + "_prm"
-    if prm not in _TMP_PATHS:
-        atexit.register(shutil.rmtree, prm, ignore_errors=True)
-        spark.createDataFrame(
-            [(n, sign_dims, probes)], "n long, sign_dims int, probes int"
-        ).coalesce(1).write.mode("overwrite").parquet(prm)
-        _TMP_PATHS.add(prm)
-    _RP_PLANS[path] = (path, sign_dims, probes)
-    return path, sign_dims, probes
 
 
 def _dedup_text_semantic_adaptive(
@@ -502,43 +514,6 @@ def _dedup_semantic_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _quality_weights_parquet(spark: SparkSession, sf_dir: str) -> str:
-    """Train the distilled quality classifier once per (pid, sf_dir)
-    and persist its weight vector (one row, array<double> of dim+1) —
-    the served-model artifact the scoring entry and its DuckDB twin
-    both read. Labels distill the c4_clean document gate (keep_doc):
-    the classic pipeline move of replacing a rule cascade with one
-    dense scorer. Training is exact-integer Gram aggregation + a
-    driver-side 65×65 ridge solve (plan-time, outside the
-    cross-engine contract — only the persisted weights are replayed)."""
-    import atexit
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from engine.spark import analytics as A
-
-    hv = _hash_vectors_parquet(spark, sf_dir)
-    path = _per_turn_path(sf_dir) + "_qw"
-    if path not in _TMP_PATHS:
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-        vecs = spark.read.parquet(hv)
-        labels = (
-            A.c4_clean(spark, sf_dir)
-            .select(
-                F.col("doc_id").alias("vec_id"),
-                F.col("keep_doc").cast("int").alias("label"),
-            )
-            .join(vecs.select("vec_id"), "vec_id")
-        )
-        wvec = A.quality_train(vecs, labels)
-        spark.createDataFrame(
-            [(wvec,)], "wvec array<double>"
-        ).coalesce(1).write.mode("overwrite").parquet(path)
-        _TMP_PATHS.add(path)
-    return path
-
-
 def _quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model-based quality filtering (the CCNet/fasttext-lineage
     component): score every document's hash-embed features with the
@@ -562,38 +537,27 @@ def _planted_conv_turns(
     dropped) and, when ``with_dup``, also as '~dup' exact copies.
     ``with_role`` keeps the role column (preference_pairs needs it).
     Single source of truth — the DuckDB side mirrors it in
-    _conv_apply_drop_ctes / _conv_near_oracle / _planted_sql."""
+    _conv_apply_drop_ctes / _conv_near_oracle / _planted_role_ctes."""
     from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
 
     cols = ["conv_id", "turn_idx"] + (["role"] if with_role else []) + [
         "cleaned_text"
     ]
     src = spark.read.parquet(_sft_turns_parquet(spark)).select(*cols)
-    base = src.withColumn(
-        "mx", F.max("turn_idx").over(W.partitionBy("conv_id"))
+    last_dropped = (
+        src.withColumn("mx", F.max("turn_idx").over(W.partitionBy("conv_id")))
+        .filter(F.col("turn_idx") < F.col("mx"))
+        .drop("mx")
     )
-    sel = F.substring(F.md5("conv_id"), 1, 1) == "0"
-    copy_cols = [F.concat("conv_id", F.lit("~dup")).alias("conv_id")] + [
-        F.col(c) for c in cols[1:]
-    ]
-    near_cols = [F.concat("conv_id", F.lit("~near")).alias("conv_id")] + [
-        F.col(c) for c in cols[1:]
-    ]
-    out = src
-    if with_dup:
-        out = out.unionByName(base.filter(sel).select(*copy_cols))
-    return out.unionByName(
-        base.filter(sel & (F.col("turn_idx") < F.col("mx"))).select(*near_cols)
-    )
+    out = src.unionByName(_copy(src, "~dup")) if with_dup else src
+    return out.unionByName(_copy(last_dropped, "~near"))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from pyspark.sql import functions as F
-
     from engine.spark import analytics as A
     from engine.spark import ats as _ats
     from engine.spark import relational as R
+    from engine.spark import validation as V
     from engine.spark.pipeline import conversation_rollup
 
     def extract_turns_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -624,7 +588,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ex = _ex(spark, sf_dir).persist()
         try:
             turns = spark.read.parquet(_per_turn_parquet(spark, sf_dir, ex))
-            spans = spark.read.parquet(_spans_parquet(spark, sf_dir, ex))
+            spans = spark.read.parquet(_spans_parquet(sf_dir, ex))
         finally:
             ex.unpersist()
         t = turns.groupBy("conv_id").agg(
@@ -648,16 +612,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return conversation_rollup(
             spark.read.parquet(_per_turn_parquet(spark, sf_dir))
         )
-
-    def validate_invoice_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # P4 at table scale, fully oracled: deterministic invoice fields
-        # derived from orders, validated by the same native predicates
-        # as the extraction-output path (kernel parity for those in
-        # tests/test_validators.py). Issue columns are sorted ';' joins
-        # so the driver's pandas canonicalization can sort them.
-        from engine.spark.validation import validate_invoice_fields_table
-
-        return validate_invoice_fields_table(spark, sf_dir)
 
     def validate_invoice_extracted(spark: SparkSession, sf_dir: str) -> DataFrame:
         # P4 natively over extraction output. Runs over the synthetic
@@ -686,15 +640,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # '0' (~1/16) are re-added under a '~dup' suffix ('~' sorts
         # after alphanumerics, so the original stays the keeper) —
         # non-vacuity is pytest-asserted.
-        from pyspark.sql import functions as F
-
         from engine.spark.pipeline import dedup_conversations as _dc
 
         src = spark.read.parquet(_conv_text_parquet(spark, sf_dir))
-        dups = src.filter(
-            F.substring(F.md5("conv_id"), 1, 1) == "0"
-        ).withColumn("conv_id", F.concat("conv_id", F.lit("~dup")))
-        return _dc(src.unionByName(dups))
+        return _dc(src.unionByName(_copy(src, "~dup")))
 
     def transcript_prepare(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the transcript-native end-to-end pipeline: conversation dedup
@@ -702,15 +651,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # stage is non-vacuous) -> quality gate (token floor splits the
         # corpus) -> shard-windowed packing. DuckDB recomputes the full
         # chain from the same materialized cleaned-text parquet.
-        from pyspark.sql import functions as F
-
         from engine.spark.pipeline import transcript_prepare as _tp
 
         src = spark.read.parquet(_conv_text_parquet(spark, sf_dir))
-        dups = src.filter(
-            F.substring(F.md5("conv_id"), 1, 1) == "0"
-        ).withColumn("conv_id", F.concat("conv_id", F.lit("~dup")))
-        return _tp(src.unionByName(dups))
+        return _tp(src.unionByName(_copy(src, "~dup")))
 
     def sft_examples(spark: SparkSession, sf_dir: str) -> DataFrame:
         # training-example construction: per assistant turn, the
@@ -896,17 +840,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from engine.spark.agent import conversation_wellformed as _cw
 
         src = spark.read.parquet(_agent_turns_parquet(spark))
-        bad = src.filter(
-            F.substring(F.md5("conv_id"), 1, 1) == "0"
-        ).select(
-            F.concat("conv_id", F.lit("~bad")).alias("conv_id"),
-            "turn_idx",
-            F.lit("assistant").alias("role"),
-            "text",
-            "tool",
-            "ts",
-        )
-        return _cw(src.unionByName(bad))
+        return _cw(src.unionByName(_copy(src, "~bad", role=F.lit("assistant"))))
 
     def agent_loop_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         # stuck-agent gate: longest consecutive identical-action run
@@ -919,7 +853,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         src = spark.read.parquet(_agent_turns_parquet(spark))
         looped = (
-            src.filter(F.substring(F.md5("conv_id"), 1, 1) == "1")
+            src.filter(_picked("1"))
             .withColumn("r", F.explode(F.array(*[F.lit(i) for i in range(3)])))
             .select(
                 F.concat("conv_id", F.lit("~loop")).alias("conv_id"),
@@ -943,20 +877,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from engine.spark.agent import canned_responses as _cr
 
         src = spark.read.parquet(_agent_turns_parquet(spark))
-        planted = (
-            src.filter(F.substring(F.md5("conv_id"), 1, 1) == "2")
-            .select("conv_id")
-            .distinct()
-            .select(
-                "conv_id",
-                F.lit(9999).cast("int").alias("turn_idx"),
-                F.lit("assistant").alias("role"),
-                F.lit(_CANNED_TEXT).alias("text"),
-                F.lit(None).cast("string").alias("tool"),
-                F.lit("2025-01-01 00:00:00").cast("timestamp").alias("ts"),
-            )
-        )
-        return _cr(src.unionByName(planted))
+        return _cr(_plant(src, "2", [(9999, "assistant", _CANNED_TEXT, _TS0)]))
 
     def context_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # context-window prefix fit (512-token limit) per conversation
@@ -980,20 +901,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from engine.spark.agent import refusal_detect as _rd
 
         src = spark.read.parquet(_agent_turns_parquet(spark))
-        planted = (
-            src.filter(F.substring(F.md5("conv_id"), 1, 1) == "3")
-            .select("conv_id")
-            .distinct()
-            .select(
-                "conv_id",
-                F.lit(9999).cast("int").alias("turn_idx"),
-                F.lit("assistant").alias("role"),
-                F.lit(_CANNED_TEXT).alias("text"),
-                F.lit(None).cast("string").alias("tool"),
-                F.lit("2025-01-01 00:00:00").cast("timestamp").alias("ts"),
-            )
-        )
-        return _rd(src.unionByName(planted))
+        return _rd(_plant(src, "3", [(9999, "assistant", _CANNED_TEXT, _TS0)]))
 
     def truncation_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         # mid-generation-truncation gate. mid_cut fires naturally (the
@@ -1005,26 +913,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from engine.spark.agent import truncation_detect as _td
 
         src = spark.read.parquet(_agent_turns_parquet(spark))
-        convs = (
-            src.filter(F.substring(F.md5("conv_id"), 1, 1) == "4")
-            .select("conv_id")
-            .distinct()
-        )
-
-        def _turn(idx: int, text: str):
-            return convs.select(
-                "conv_id",
-                F.lit(idx).cast("int").alias("turn_idx"),
-                F.lit("assistant").alias("role"),
-                F.lit(text).alias("text"),
-                F.lit(None).cast("string").alias("tool"),
-                F.lit("2025-01-01 00:00:00").cast("timestamp").alias("ts"),
-            )
-
-        planted = _turn(9998, _TRUNC_ELLIPSIS_TEXT).unionByName(
-            _turn(9999, _TRUNC_FENCE_TEXT)
-        )
-        return _td(src.unionByName(planted))
+        return _td(_plant(src, "4", [
+            (9998, "assistant", _TRUNC_ELLIPSIS_TEXT, _TS0),
+            (9999, "assistant", _TRUNC_FENCE_TEXT, _TS0),
+        ]))
 
     def assistant_echo(spark: SparkSession, sf_dir: str) -> DataFrame:
         # prompt-parroting gate. The generator's repeated per-kind
@@ -1038,26 +930,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from engine.spark.agent import assistant_echo as _ae
 
         src = spark.read.parquet(_agent_turns_parquet(spark))
-        convs = (
-            src.filter(F.substring(F.md5("conv_id"), 1, 1) == "5")
-            .select("conv_id")
-            .distinct()
-        )
-
-        def _turn(idx: int, role: str, text: str):
-            return convs.select(
-                "conv_id",
-                F.lit(idx).cast("int").alias("turn_idx"),
-                F.lit(role).alias("role"),
-                F.lit(text).alias("text"),
-                F.lit(None).cast("string").alias("tool"),
-                F.lit("2025-01-01 00:00:00").cast("timestamp").alias("ts"),
-            )
-
-        planted = _turn(9998, "user", _ECHO_USER_TEXT).unionByName(
-            _turn(9999, "assistant", _ECHO_ASSISTANT_TEXT)
-        )
-        return _ae(src.unionByName(planted))
+        return _ae(_plant(src, "5", [
+            (9998, "user", _ECHO_USER_TEXT, _TS0),
+            (9999, "assistant", _ECHO_ASSISTANT_TEXT, _TS0),
+        ]))
 
     def turn_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
         # ingest-invariant audit. The generator's conversations are
@@ -1069,28 +945,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from engine.spark.agent import turn_integrity as _ti
 
         src = spark.read.parquet(_agent_turns_parquet(spark))
-        convs = (
-            src.filter(F.substring(F.md5("conv_id"), 1, 1) == "6")
-            .select("conv_id")
-            .distinct()
-        )
-
-        def _turn(idx: int, ts: str):
-            return convs.select(
-                "conv_id",
-                F.lit(idx).cast("int").alias("turn_idx"),
-                F.lit("user").alias("role"),
-                F.lit("x").alias("text"),
-                F.lit(None).cast("string").alias("tool"),
-                F.lit(ts).cast("timestamp").alias("ts"),
-            )
-
-        planted = (
-            _turn(9998, "2026-06-01 00:00:01")
-            .unionByName(_turn(9998, "2026-06-01 00:00:02"))
-            .unionByName(_turn(9999, "2025-01-01 00:00:00"))
-        )
-        return _ti(src.unionByName(planted))
+        return _ti(_plant(src, "6", [
+            (9998, "user", "x", "2026-06-01 00:00:01"),
+            (9998, "user", "x", "2026-06-01 00:00:02"),
+            (9999, "user", "x", _TS0),
+        ]))
 
     full = {
         # relational / reference-semantics operators (SURVEY.md §2.4-2.7)
@@ -1313,16 +1172,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # conversations (the prefix duplication whole-conv dedup
         # misses), capped at 32 turns — the scale bound
         "conversation_branches": _conversation_branches,
-        "validate_invoice_fields": validate_invoice_fields,
+        # P4 at table scale, fully oracled: deterministic invoice fields
+        # derived from orders, validated by the same native predicates
+        # as the extraction-output path (kernel parity for those in
+        # tests/test_validators.py). Issue columns are sorted ';' joins
+        # so the driver's pandas canonicalization can sort them.
+        "validate_invoice_fields": V.validate_invoice_fields_table,
         "validate_invoice_extracted": validate_invoice_extracted,
         "doc_token_estimate": doc_token_estimate,
         # deterministic CareerProgression (the last reference response
         # field; analyzer.py:443-470, native over the experience array)
-        "career_progression": _career_progression,
+        "career_progression": V.career_progression_table,
         # the reference's post-LLM fit-response normalization
         # (allowlists/defaults/rec-map, analyzer.py:401-505) over
         # deterministic synthetic responses
-        "candidate_fit_parse": _candidate_fit_parse,
+        "candidate_fit_parse": V.candidate_fit_parse_table,
         # full ATS lifecycle (A5 complete + suggestion/summary/
         # recommendation generators, all native; engine/spark/ats.py)
         "ats_full_score": _ats.ats_full_score,
@@ -1489,8 +1353,6 @@ def _preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the same prompt with a shorter response (real pairs), '~dup'
     # exact copies carry no preference signal and must be excluded by
     # the identical-response-fingerprint gate — both arms exercised.
-    from pyspark.sql import functions as F
-
     from engine.spark.pipeline import preference_pairs as _pp
 
     # third planted arm: '~alt' copies whose assistant turns are
@@ -1504,20 +1366,13 @@ def _preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = spark.read.parquet(_sft_turns_parquet(spark)).select(
         "conv_id", "turn_idx", "role", "cleaned_text"
     )
-    alt = src.filter(F.substring(F.md5("conv_id"), 1, 1) == "0").select(
-        F.concat("conv_id", F.lit("~alt")).alias("conv_id"),
-        "turn_idx",
-        "role",
-        F.when(
-            F.col("role") == "assistant",
-            F.expr(
-                "substring(cleaned_text, 1,"
-                " cast(floor(length(cleaned_text) / 2) as int))"
-            ),
-        )
-        .otherwise(F.col("cleaned_text"))
-        .alias("cleaned_text"),
-    )
+    alt = _copy(src, "~alt", cleaned_text=F.when(
+        F.col("role") == "assistant",
+        F.expr(
+            "substring(cleaned_text, 1,"
+            " cast(floor(length(cleaned_text) / 2) as int))"
+        ),
+    ).otherwise(F.col("cleaned_text")))
     return _pp(base.unionByName(alt))
 
 
@@ -1529,18 +1384,6 @@ def _conversation_branches(spark: SparkSession, sf_dir: str) -> DataFrame:
     from engine.spark.pipeline import conversation_branches as _cb
 
     return _cb(_planted_conv_turns(spark, with_dup=True))
-
-
-def _career_progression(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from engine.spark.validation import career_progression_table
-
-    return career_progression_table(spark, sf_dir)
-
-
-def _candidate_fit_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from engine.spark.validation import candidate_fit_parse_table
-
-    return candidate_fit_parse_table(spark, sf_dir)
 
 
 # expected normalization outcomes per synthetic-response branch

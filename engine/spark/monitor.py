@@ -9,6 +9,7 @@ aggregation).
 
 from __future__ import annotations
 
+import json
 from typing import TYPE_CHECKING
 
 from pyspark.sql import functions as F
@@ -74,6 +75,26 @@ def run_totals(spark: "SparkSession", out_dir: str, run_id: str) -> dict[str, in
         "bytes_parsed": int(row[1] or 0),
         "empty_extractions": int(row[2] or 0),
     }
+
+
+def finish_job(
+    spark: "SparkSession", out_dir: str, name: str, metrics: dict,
+    owns_session: bool,
+) -> None:
+    """A batch job's metrics tail: ``metrics`` as one JSON line, written
+    to ``<out_dir>/metrics_<name>`` as a one-line text table and
+    printed. The write goes through Spark so hdfs://-style outputs work
+    too (builtin open() only handles local paths), and overwrite keeps
+    a re-submission idempotent. The session is stopped only if the job
+    created it — an in-process caller (tests, notebooks) keeps its
+    own."""
+    line = json.dumps(metrics)
+    spark.createDataFrame([(line,)], "v string").coalesce(1).write.mode(
+        "overwrite"
+    ).text(f"{out_dir}/metrics_{name}")
+    print(line)
+    if owns_session:
+        spark.stop()
 
 
 def metrics_summary(spark: "SparkSession", out_dir: str) -> "DataFrame":

@@ -30,7 +30,6 @@ beside the table through Spark (object-store/HDFS-safe).
 from __future__ import annotations
 
 import argparse
-import json
 import sys
 
 
@@ -60,6 +59,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from pyspark.sql import SparkSession
 
+    from engine.spark.monitor import finish_job
     from engine.spark.pipeline import (
         run_extraction,
         transcript_curate,
@@ -115,12 +115,7 @@ def main(argv: list[str] | None = None) -> int:
         "drop_rate": round(1 - n_out / n_convs, 6) if n_convs else None,
         "output": dest,
     }
-    spark.createDataFrame([(json.dumps(metrics),)], "v string").coalesce(
-        1
-    ).write.mode("overwrite").text(f"{args.output}/metrics_{args.mode}")
-    print(json.dumps(metrics))
-    if owns_session:
-        spark.stop()
+    finish_job(spark, args.output, args.mode, metrics, owns_session)
     return 0
 
 
@@ -137,6 +132,7 @@ def _gate_mode(spark, t, n_turns: int, args, owns_session: bool) -> int:
         conversation_wellformed,
         loop_detect,
     )
+    from engine.spark.monitor import finish_job
 
     wf = conversation_wellformed(t).select(
         "conv_id", "n_turns", "is_wellformed"
@@ -186,12 +182,7 @@ def _gate_mode(spark, t, n_turns: int, args, owns_session: bool) -> int:
         if agg["n"] else None,
         "output": dest,
     }
-    spark.createDataFrame([(json.dumps(metrics),)], "v string").coalesce(
-        1
-    ).write.mode("overwrite").text(f"{args.output}/metrics_gate")
-    print(json.dumps(metrics))
-    if owns_session:
-        spark.stop()
+    finish_job(spark, args.output, "gate", metrics, owns_session)
     return 0
 
 

@@ -34,7 +34,6 @@ object-store/HDFS outputs work — for the run log.
 from __future__ import annotations
 
 import argparse
-import json
 import sys
 
 
@@ -62,6 +61,7 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import SparkSession
 
     from engine.spark import analytics as A
+    from engine.spark.monitor import finish_job
 
     # only stop a session this job created — an in-process caller
     # (tests, notebooks) keeps its own session alive
@@ -111,18 +111,10 @@ def main(argv: list[str] | None = None) -> int:
         "drop_rate": round(1 - n_out / n_in, 6) if n_in else None,
         "output": dest,
     }
-    # write metrics through Spark so hdfs://-style outputs work too
-    # (builtin open() only handles local paths); overwrite keeps the
-    # re-submission idempotent. Manifest metrics are keyed per SEED —
-    # each epoch's manifest is its own table, so its run record must
-    # not clobber the previous epoch's.
+    # manifest metrics are keyed per SEED — each epoch's manifest is its
+    # own table, so its run record must not clobber the previous epoch's
     metrics_name = table if args.mode == "manifest" else args.mode
-    spark.createDataFrame([(json.dumps(metrics),)], "v string").coalesce(
-        1
-    ).write.mode("overwrite").text(f"{args.output}/metrics_{metrics_name}")
-    print(json.dumps(metrics))
-    if owns_session:
-        spark.stop()
+    finish_job(spark, args.output, metrics_name, metrics, owns_session)
     return 0
 
 

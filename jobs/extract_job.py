@@ -44,7 +44,10 @@ def main(argv: list[str] | None = None) -> int:
         transcripts_from_jsonl,
     )
 
-    # spark-submit provides the session config (master, executors, ...)
+    # spark-submit provides the session config (master, executors, ...);
+    # only stop a session this job created — an in-process caller
+    # (tests, notebooks) keeps its own session alive
+    owns_session = SparkSession.getActiveSession() is None
     spark = SparkSession.builder.appName("extract-transcripts").getOrCreate()
 
     n_source_errors = 0
@@ -78,7 +81,8 @@ def main(argv: list[str] | None = None) -> int:
         **run_totals(spark, args.output, args.run_id),
         "source_errors": n_source_errors,
     }))
-    spark.stop()
+    if owns_session:
+        spark.stop()
     return 0
 
 

@@ -691,3 +691,25 @@ def test_out_of_pandas_range_ts_passes_through(spark, transcripts, tmp_path_fact
     assert _ts_by_key(run_checkpointed(spark, raw, out, num_partitions=8)) == want
 
     assert _ts_by_key(llm_enrich(run_extraction(raw, num_partitions=8))) == want
+
+
+def test_extract_job_main_keeps_callers_session(spark, tmp_path, capsys):
+    """jobs/extract_job.py in-process: the synthesized run lands in the
+    sink, and the caller's session survives the job."""
+    import sys
+
+    sys.path.insert(0, "jobs")
+    try:
+        import extract_job
+    finally:
+        sys.path.pop(0)
+
+    out = str(tmp_path / "run")
+    rc = extract_job.main(
+        ["--synthesize", "6", "--output", out, "--num-partitions", "4"]
+    )
+    assert rc == 0
+    line = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert line["rows_in_sink"] > 0
+    assert line["turns_processed"] == line["rows_in_sink"]
+    assert spark.range(3).count() == 3
